@@ -28,6 +28,7 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -74,6 +75,10 @@ class SnapshotTable:
         with open(os.path.join(self._mdir, f"v{version}.json")) as fh:
             return json.load(fh)
 
+    @staticmethod
+    def _schema(m: dict) -> StructType:
+        return StructType.fromJson(json.loads(m["schema"]))
+
     # -- read -------------------------------------------------------------
     def read(self, version: int | None = None,
              partitions: list | None = None) -> DataFrame:
@@ -89,12 +94,27 @@ class SnapshotTable:
             entries = [e for e in entries if str(e.get("partition")) in want]
         paths = [os.path.join(self._ddir, e["file"]) for e in entries]
         if not paths:
-            from pyspark.sql.types import StructType
-
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(m["schema"]))
-            )
+            return self.spark.createDataFrame([], self._schema(m))
         return self.spark.read.parquet(*paths)
+
+    def _touched(self, m: dict, parts: set[str] | None
+                 ) -> tuple[DataFrame, list[dict]]:
+        """Split manifest ``m`` for a partition-local rewrite: a frame
+        over the files whose partition value (as ``str``) is in
+        ``parts`` — every file when ``parts`` is None — and the
+        untouched entries the next version carries over verbatim. The
+        frame is read with the manifest schema, so no footer is
+        inferred and no untouched file is listed."""
+        if parts is None:
+            touched, kept = m["files"], []
+        else:
+            touched = [e for e in m["files"] if str(e["partition"]) in parts]
+            kept = [e for e in m["files"] if str(e["partition"]) not in parts]
+        if not touched:
+            return self.spark.createDataFrame([], self._schema(m)), kept
+        return self.spark.read.schema(self._schema(m)).parquet(
+            *[os.path.join(self._ddir, e["file"]) for e in touched]
+        ), kept
 
     # -- write ------------------------------------------------------------
     def _stage(self, df: DataFrame) -> list[dict]:
@@ -196,31 +216,18 @@ class SnapshotTable:
         the snapshot it read — Delta's MERGE conflict semantics);
         files staged by the losing attempt become unreferenced and die
         at the next `vacuum`."""
-        from pyspark.sql import functions as F
-
+        parts = None
+        if self.partition_col:
+            parts = {str(r[0]) for r in
+                     updates.select(self.partition_col).distinct().collect()}
         last: ConcurrentCommitError | None = None
         for _ in range(max_retries + 1):
             v = self.current_version()
             m = self._manifest(v)
-            if self.partition_col:
-                parts = {
-                    str(r[0])
-                    for r in
-                    updates.select(self.partition_col).distinct().collect()
-                }
-                touched = [e for e in m["files"] if str(e["partition"]) in parts]
-                kept = [e for e in m["files"] if str(e["partition"]) not in parts]
-            else:
-                touched, kept = m["files"], []
-            if touched:
-                cur = self.spark.read.parquet(
-                    *[os.path.join(self._ddir, e["file"]) for e in touched]
-                )
-                merged = cur.join(
-                    updates.select(key).distinct(), [key], "left_anti"
-                ).unionByName(updates.select(*cur.columns))
-            else:
-                merged = updates
+            cur, kept = self._touched(m, parts)
+            merged = cur.join(
+                updates.select(key).distinct(), [key], "left_anti"
+            ).unionByName(updates.select(*cur.columns))
             entries = kept + self._stage(merged)
             try:
                 self._commit(v + 1, entries, m["schema"])
@@ -262,7 +269,14 @@ class SnapshotTable:
         the partition column and keys must not move partitions).
         Target rows matched by no source row and source rows matched
         by no target row ride through the same join — no second pass,
-        no window."""
+        no window.
+
+        Scale shape: one source aggregate (row count, distinct keys and
+        touched partition values, computed once, outside the retry
+        loop), one read of the touched files and one staged write.
+        Target columns, the read schema and the file list come from the
+        manifest, so nothing scales with the untouched files: no
+        listing of them and no footer inference."""
         from pyspark.sql import functions as F
 
         # _t/_s are the internal match markers injected below; a user
@@ -271,7 +285,7 @@ class SnapshotTable:
         # every rewritten row committed with the marker literal — the
         # same loud-failure rule optimize() applies to its __zo/z* names
         reserved = {"_t", "_s"}
-        tcols = self.read().columns
+        tcols = self._schema(self._manifest(self.current_version())).names
         for side, colset in (("target", tcols), ("source", source.columns)):
             hit = [c for c in colset if c.lower() in reserved]
             if hit:
@@ -289,8 +303,13 @@ class SnapshotTable:
                     "version with no update applied (Delta raises an "
                     "unresolved-column error for the same mistake)"
                 )
-        n_src = source.count()
-        n_keys = source.select(on).distinct().count()
+        # one aggregate validates the source and finds the partitions it
+        # touches; struct() keeps nulls countable: a null key is one
+        # distinct value, a null partition value becomes "None" as str()
+        aggs = [F.count(F.lit(1)), F.count_distinct(F.struct(on))]
+        if self.partition_col:
+            aggs.append(F.collect_set(F.struct(self.partition_col)))
+        n_src, n_keys, *pv = source.agg(*aggs).first()
         if n_keys != n_src:
             raise ValueError(
                 f"merge: source has {n_src} rows but {n_keys} distinct "
@@ -298,28 +317,12 @@ class SnapshotTable:
                 "(multiple matches per target row are nondeterministic; "
                 "pre-aggregate the source)"
             )
+        parts = {str(r[0]) for r in pv[0]} if pv else None
         last: ConcurrentCommitError | None = None
         for _ in range(max_retries + 1):
             v = self.current_version()
             m = self._manifest(v)
-            if self.partition_col:
-                parts = {
-                    str(r[0])
-                    for r in
-                    source.select(self.partition_col).distinct().collect()
-                }
-                touched = [e for e in m["files"]
-                           if str(e["partition"]) in parts]
-                kept = [e for e in m["files"]
-                        if str(e["partition"]) not in parts]
-            else:
-                touched, kept = m["files"], []
-            if touched:
-                cur = self.spark.read.parquet(
-                    *[os.path.join(self._ddir, e["file"]) for e in touched]
-                )
-            else:
-                cur = self.spark.createDataFrame([], self.read(v).schema)
+            cur, kept = self._touched(m, parts)
             cols = cur.columns
             j = (
                 cur.withColumn("_t", F.lit(1)).alias("t")

@@ -361,7 +361,9 @@ def test_aqe_skew_join_splits_adversarial_partition(spark):
         spark.conf.set(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB"
         )
-        big = spark.range(200_000).select(
+        # numPartitions pinned: a 1-partition Range at local[1] already
+        # satisfies the join distribution, so no shuffle and no skew split
+        big = spark.range(0, 200_000, numPartitions=4).select(
             F.when(F.col("id") % 10 < 9, F.lit(0))
             .otherwise(F.col("id")).alias("k"),
             # ~64 bytes of deterministic padding so the hot partition
@@ -369,7 +371,7 @@ def test_aqe_skew_join_splits_adversarial_partition(spark):
             F.concat(F.md5(F.col("id").cast("string")),
                      F.md5((F.col("id") + 1).cast("string"))).alias("pad"),
         )
-        small = spark.range(1_000).select(
+        small = spark.range(0, 1_000, numPartitions=4).select(
             F.col("id").alias("k"), F.lit("dim").alias("tag")
         )
         j = big.join(small, "k")

@@ -33,7 +33,9 @@ def test_global_window_lint_fires_and_spares_bounded(spark):
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    base = spark.range(1000).withColumn("v", F.col("id") % 7)
+    # numPartitions pinned: a 1-partition input at local[1] needs no
+    # Exchange SinglePartition, so the pathology would not show
+    base = spark.range(0, 1000, numPartitions=4).withColumn("v", F.col("id") % 7)
     bad = base.withColumn("r", F.ntile(4).over(W.orderBy("v", "id")))
     assert "global-window" in {a.rule for a in advisor.lint_plan(bad)}
 

@@ -250,13 +250,15 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     try:
         for k, v in tuned.items():
             spark.conf.set(k, v)
-        big = spark.range(0, 400000).select(
+        # numPartitions pinned: a 1-partition Range at local[1] already
+        # satisfies the join distribution, so no shuffle and no skew split
+        big = spark.range(0, 400000, numPartitions=4).select(
             F.when(F.col("id") < 300000, F.lit(7))
             .otherwise(F.pmod("id", 1000))
             .alias("k"),
             F.col("id").alias("v"),
         )
-        small = spark.range(0, 1000).select(
+        small = spark.range(0, 1000, numPartitions=4).select(
             F.col("id").alias("k"), (F.col("id") * 2).alias("w")
         )
         j = big.join(small, "k").select(F.sum("v").alias("s"))

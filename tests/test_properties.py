@@ -720,7 +720,11 @@ def test_hll_sketch_union_estimate_differs_from_direct(spark):
         .agg(F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("e"))
         .first()["e"]
     )
-    direct = df.agg(
+    # coalesce(1): one partial sketch over the whole input. Without it
+    # the "direct" sketch is itself a union of per-partition partials,
+    # and whether it lands on the merged estimate depends on how many
+    # partitions local[N] happens to split the range into
+    direct = df.coalesce(1).agg(
         F.hll_sketch_estimate(F.hll_sketch_agg("uid")).alias("e")
     ).first()["e"]
     assert merged != direct  # the pinned non-identity

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import glob
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -653,3 +654,146 @@ def test_shallow_clone_zero_copy_and_independent_evolution(spark, tmp_path):
     t.vacuum(retain_last=1)
     with pytest.raises(Exception):
         c.read(version=1).filter(F.col("dt") == "d1").count()
+
+
+def _jobs_and_tasks(spark, fn):
+    """(jobs, tasks run) of the Spark work ``fn`` launches, counted
+    through a job group and the status tracker."""
+    sc = spark.sparkContext
+    group = f"snapshot-pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "snapshot job-count pin")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in st.getJobInfo(j).stageIds}
+    tasks = sum(info.numCompletedTasks for info in map(st.getStageInfo, stages)
+                if info is not None)
+    return len(jobs), tasks
+
+
+def _month_table(spark, path, n_parts):
+    """One file per partition value (coalesce(1)), so the file count —
+    and every listing over it — is n_parts whatever the core count."""
+    df = spark.range(0, n_parts * 10).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 3).alias("val"),
+        F.format_string("p%03d", F.col("id") % n_parts).alias("pt"),
+    ).coalesce(1)
+    return SnapshotTable.create(spark, df, path, partition_col="pt")
+
+
+def test_merge_job_count_independent_of_untouched_partitions(spark, tmp_path):
+    """A partition-local MERGE plans from its manifest: target columns,
+    read schema and file list come from the manifest, so a merge that
+    touches 2 of 40 partitions runs a fixed handful of jobs (source
+    aggregate, touched-file read, staged write) and its task count does
+    not grow when the table has 80 partitions. Resolving the target
+    columns through read() would list all files (past Spark's 32-path
+    parallel-listing threshold, one task per file) and infer a footer
+    schema, breaking both pins."""
+    src_rows = [(1, -1, "p001"), (2, -2, "p002"), (10_000, 7, "p001")]
+    counts = {}
+    for n_parts in (40, 80):
+        t = _month_table(spark, str(tmp_path / f"m{n_parts}"), n_parts)
+        src = spark.createDataFrame(src_rows, "k long, val long, pt string")
+        counts[n_parts] = _jobs_and_tasks(spark, lambda: t.merge(src, on="k"))
+        got = {(r.k, r.val) for r in t.read().filter("pt IN ('p001', 'p002')")
+               .collect()}
+        assert {(1, -1), (2, -2), (10_000, 7)} <= got
+        assert t.read().count() == n_parts * 10 + 1
+    jobs40, tasks40 = counts[40]
+    jobs80, tasks80 = counts[80]
+    assert jobs40 <= 6, counts
+    assert jobs80 == jobs40, counts
+    assert tasks80 <= tasks40, counts
+
+
+def test_merge_source_validation_null_semantics(spark, tmp_path):
+    """The one-pass source validation keeps the old null semantics: a
+    null key is one distinct value (one null key merges as an insert,
+    two raise the unique-key error), and a null partition value adds
+    no touched file (it matches no manifest partition, which records
+    nulls as Spark's default-partition directory name)."""
+    rows = [(1, 10, "d1"), (2, 20, "d1"), (3, 30, "d2"), (4, 40, None)]
+    t = SnapshotTable.create(
+        spark, spark.createDataFrame(rows, "k long, val long, dt string"),
+        str(tmp_path / "nulls"), partition_col="dt",
+    )
+    v0 = t.current_version()
+    files_v0 = {e["file"]: e["partition"] for e in t._manifest(v0)["files"]}
+
+    one_null = spark.createDataFrame(
+        [(None, 99, "d1"), (1, 11, "d1")], "k long, val long, dt string")
+    v1 = t.merge(one_null, on="k")
+    got = sorted((r.k is None, r.k, r.val, r.dt) for r in t.read(v1).collect())
+    assert got == sorted([(True, None, 99, "d1"), (False, 1, 11, "d1"),
+                          (False, 2, 20, "d1"), (False, 3, 30, "d2"),
+                          (False, 4, 40, None)])
+
+    two_null = spark.createDataFrame(
+        [(None, 1, "d1"), (None, 2, "d2")], "k long, val long, dt string")
+    with pytest.raises(ValueError, match="unique source key"):
+        t.merge(two_null, on="k")
+    assert t.current_version() == v1
+
+    # null partition value: only d2's files are rewritten; the existing
+    # null-partition file is carried over, and the source row is inserted
+    files_v1 = {e["file"]: e["partition"] for e in t._manifest(v1)["files"]}
+    null_src = spark.createDataFrame(
+        [(3, 33, "d2"), (5, 50, None)], "k long, val long, dt string")
+    v2 = t.merge(null_src, on="k")
+    files_v2 = {e["file"]: e["partition"] for e in t._manifest(v2)["files"]}
+    rewritten = {p for f, p in files_v1.items() if f not in files_v2}
+    assert rewritten == {"d2"}
+    assert {f for f, p in files_v0.items() if p not in ("d1", "d2")} \
+        <= set(files_v2)
+    got2 = {(r.k, r.val, r.dt) for r in t.read(v2).collect() if r.k is not None}
+    assert got2 == {(1, 11, "d1"), (2, 20, "d1"), (3, 33, "d2"),
+                    (4, 40, None), (5, 50, None)}
+
+
+def test_manifest_schema_matches_inferred_read_schema(spark, tmp_path):
+    """The manifest schema can stand in for footer inference: on a
+    partitioned table with timestamp, date, decimal and string columns,
+    read()'s inferred schema equals the manifest's field for field
+    (names and types; nullability aside) after create, merge and
+    optimize."""
+    import datetime as dt
+    from decimal import Decimal
+
+    rows = [
+        (i, dt.datetime(2024, 1, 1, i % 24), dt.date(2024, 1 + i % 3, 1),
+         Decimal(f"{i}.25"), f"m{i % 3}")
+        for i in range(30)
+    ]
+    t = SnapshotTable.create(
+        spark,
+        spark.createDataFrame(
+            rows, "k long, ts timestamp, d date, amt decimal(12,2), m string"),
+        str(tmp_path / "types"), partition_col="m",
+    )
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    def check():
+        m = t._manifest(t.current_version())
+        assert fields(t.read().schema) == fields(SnapshotTable._schema(m))
+
+    check()
+    src = spark.createDataFrame(
+        [(1, dt.datetime(2025, 5, 5), dt.date(2025, 5, 5), Decimal("9.99"),
+          "m1"),
+         (100, dt.datetime(2025, 6, 6), dt.date(2025, 6, 6), Decimal("1.50"),
+          "m2")],
+        "k long, ts timestamp, d date, amt decimal(12,2), m string",
+    )
+    t.merge(src, on="k", update_set={"amt": "s.amt", "ts": "s.ts"})
+    check()
+    t.optimize()
+    check()
+    assert t.read().count() == 31
