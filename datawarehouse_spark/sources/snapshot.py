@@ -30,6 +30,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+#: the block size Hadoop's local filesystem reports for every file
+#: (``fs.local.block.size``), recorded in the statuses _scan builds
+_LOCAL_BLOCK_SIZE = 32 * 1024 * 1024
+
 
 class ConcurrentCommitError(RuntimeError):
     """Another writer committed this version first — re-read and retry."""
@@ -86,35 +90,84 @@ class SnapshotTable:
         is resolved NOW, so the returned frame keeps seeing this
         snapshot even if later versions commit (files are immutable and
         survive until `vacuum`). `partitions` prunes via the manifest —
-        untouched files are never opened."""
+        untouched files are never opened.
+
+        Scale shape: O(selected files) metadata, all of it from the
+        manifest plus one local ``stat`` per file (see :meth:`_scan`);
+        no Spark job runs before the frame executes, whatever the live
+        file count. A file already deleted by ``vacuum`` raises
+        ``FileNotFoundError`` here, at call time."""
         m = self._manifest(version or self.current_version())
         entries = m["files"]
         if partitions is not None:
             want = {str(p) for p in partitions}
             entries = [e for e in entries if str(e.get("partition")) in want]
-        paths = [os.path.join(self._ddir, e["file"]) for e in entries]
-        if not paths:
-            return self.spark.createDataFrame([], self._schema(m))
-        return self.spark.read.parquet(*paths)
+        return self._scan(m, entries)
+
+    def _scan(self, m: dict, entries: list[dict]) -> DataFrame:
+        """The Parquet scan of exactly ``entries`` of manifest ``m`` —
+        the table's one reader construction.
+
+        ``spark.read.parquet(*paths)`` would list the files again (a
+        parallel listing job once past Spark's 32-path threshold) and
+        infer the schema from their footers (another job), although
+        the manifest already holds both. Spark has no public API for a
+        known file list, so this builds the file-source relation
+        directly: an ``InMemoryFileIndex`` over the entries' paths whose
+        private file-status cache is pre-filled from one driver-side
+        ``os.stat`` per entry (the class is local-filesystem-only), no
+        partition inference, and the manifest schema made nullable, as
+        file sources read it. The result is an ordinary ``FileScan
+        parquet``: filters and projections still reach the scan.
+
+        Scale shape: O(len(entries)) Py4J calls and stats, O(1) per
+        file; no Spark job before execution."""
+        jvm, jss = self.spark._jvm, self.spark._jsparkSession
+        ds = jvm.org.apache.spark.sql.execution.datasources
+        fs = jvm.org.apache.hadoop.fs
+        # bound once: each package attribute lookup is a Py4J round trip
+        hpath, status = fs.Path, fs.FileStatus
+        new_array = self.spark.sparkContext._gateway.new_array
+        # a cache of this scan's own (unbounded, no expiry), never the
+        # session-shared FileStatusCache: its entries must not outlive
+        # the scan or leak into other readers of the same paths
+        cache = ds.SharedInMemoryCache(2**62, -1).createForNewClient()
+        roots = jvm.java.util.ArrayList()
+        for e in entries:
+            p = os.path.join(self._ddir, e["file"])  # clone entries are absolute
+            st = os.stat(p)
+            jp = hpath("file:" + p)
+            leaf = new_array(status, 1)
+            leaf[0] = status(st.st_size, False, 1, _LOCAL_BLOCK_SIZE,
+                             st.st_mtime_ns // 1_000_000, jp)
+            cache.putLeafFiles(jp, leaf)
+            roots.add(jp)
+        none = jvm.scala.Option.empty()
+        no_opts = jvm.PythonUtils.toScalaMap({})
+        no_parts = ds.PartitionSpec.emptySpec()
+        index = ds.InMemoryFileIndex(
+            jss, jvm.PythonUtils.toSeq(roots), no_opts, none, cache,
+            jvm.scala.Option.apply(no_parts), none,
+        )
+        relation = ds.HadoopFsRelation(
+            index, no_parts.partitionColumns(),
+            jss.parseDataType(m["schema"]).asNullable(), none,
+            ds.parquet.ParquetFileFormat(), no_opts, jss,
+        )
+        return DataFrame(jss.baseRelationToDataFrame(relation), self.spark)
 
     def _touched(self, m: dict, parts: set[str] | None
                  ) -> tuple[DataFrame, list[dict]]:
-        """Split manifest ``m`` for a partition-local rewrite: a frame
-        over the files whose partition value (as ``str``) is in
-        ``parts`` — every file when ``parts`` is None — and the
-        untouched entries the next version carries over verbatim. The
-        frame is read with the manifest schema, so no footer is
-        inferred and no untouched file is listed."""
+        """Split manifest ``m`` for a partition-local rewrite: a
+        :meth:`_scan` of the files whose partition value (as ``str``) is
+        in ``parts`` — every file when ``parts`` is None — and the
+        untouched entries the next version carries over verbatim."""
         if parts is None:
             touched, kept = m["files"], []
         else:
             touched = [e for e in m["files"] if str(e["partition"]) in parts]
             kept = [e for e in m["files"] if str(e["partition"]) not in parts]
-        if not touched:
-            return self.spark.createDataFrame([], self._schema(m)), kept
-        return self.spark.read.schema(self._schema(m)).parquet(
-            *[os.path.join(self._ddir, e["file"]) for e in touched]
-        ), kept
+        return self._scan(m, touched), kept
 
     # -- write ------------------------------------------------------------
     def _stage(self, df: DataFrame) -> list[dict]:

@@ -712,6 +712,88 @@ def test_merge_job_count_independent_of_untouched_partitions(spark, tmp_path):
     assert tasks80 <= tasks40, counts
 
 
+def test_read_job_count_independent_of_live_files(spark, tmp_path):
+    """read() scans the manifest's files without listing them or
+    inferring a footer schema: building the frame runs no Spark job,
+    and read().count() runs the same jobs on a 40- and an 80-partition
+    table with no more tasks (no per-file listing task, no inference
+    job); so does optimize(), which reads through it. Passing the live
+    files to spark.read.parquet would list them in a parallel job (past
+    Spark's 32-path threshold, one task per file) and infer their schema
+    in another, breaking every pin. minPartitionNum is pinned to 4 so
+    Spark's read-split packing is the same at every core count: below
+    3 cores it would cap a split at 128 MB, counting 4 MB of open cost
+    per file, and give the 80-file table more read splits."""
+    key = "spark.sql.files.minPartitionNum"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "4")
+    try:
+        builds, reads, optimizes = {}, {}, {}
+        for n_parts in (40, 80):
+            t = _month_table(spark, str(tmp_path / f"r{n_parts}"), n_parts)
+            builds[n_parts] = _jobs_and_tasks(spark, t.read)
+            n = {}
+            reads[n_parts] = _jobs_and_tasks(
+                spark, lambda: n.update(rows=t.read().count()))
+            assert n["rows"] == n_parts * 10
+            optimizes[n_parts] = _jobs_and_tasks(spark, t.optimize)
+            assert t.read().count() == n_parts * 10
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert builds == {40: (0, 0), 80: (0, 0)}, builds
+    for counts, max_jobs in ((reads, 2), (optimizes, 4)):
+        (jobs40, tasks40), (jobs80, tasks80) = counts[40], counts[80]
+        assert jobs40 <= max_jobs, (reads, optimizes)
+        assert jobs80 == jobs40, (reads, optimizes)
+        assert tasks80 <= tasks40, (reads, optimizes)
+
+
+def test_read_of_vacuumed_files_fails_at_call_time(spark, tmp_path):
+    """read() stats each file it will scan when it is called, so a
+    version whose files vacuum deleted fails loudly then, not at some
+    later action: time travel past the retention boundary and a shallow
+    clone still referencing the source's vacuumed files both raise
+    FileNotFoundError. A reader pinned before vacuum to the retained
+    version still counts correctly."""
+    t = _mk(spark, tmp_path)
+    c = t.clone(str(tmp_path / "clone"))  # references t's v1 files
+    t.upsert(spark.createDataFrame(
+        [(10, "NEW", "d1")], "k long, v string, dt string"), "k")
+    pinned = t.read(version=2)
+    assert t.vacuum(retain_last=1)  # v1's d1 files died
+    with pytest.raises(FileNotFoundError):
+        t.read(version=1)
+    with pytest.raises(FileNotFoundError, match="part-"):
+        c.read()
+    with pytest.raises(FileNotFoundError):
+        c.read(partitions=["d1"])
+    assert c.read(partitions=["d2"]).count() == 50  # d2 files survive
+    assert pinned.count() == 100
+    assert pinned.filter(F.col("k") == 10).first()["v"] == "NEW"
+
+
+def test_manifest_scan_is_a_parquet_file_scan(spark, tmp_path):
+    """The manifest scan is an ordinary Parquet file-source scan: a
+    filter on a data column reaches the reader as a pushed filter and
+    a projection narrows the read schema, as in
+    test_plans.py::test_filter_pushed_to_parquet_scan."""
+    from datawarehouse_spark.plans import parity
+
+    t = _mk(spark, tmp_path)
+    df = t.read().filter(F.col("k") == 10).select("k")
+    plan = parity.analyze(df).spark_plan
+    assert "FileScan parquet" in plan, plan
+    assert "PushedFilters: [IsNotNull(k), EqualTo(k,10)]" in plan, plan
+    assert "ReadSchema: struct<k:bigint>" in plan, plan
+    assert [r.k for r in df.collect()] == [10]
+    # selecting no file scans nothing, with the table's columns
+    empty = t.read(partitions=["d9"])
+    assert empty.columns == ["k", "v", "dt"] and empty.count() == 0
+
+
 def test_merge_source_validation_null_semantics(spark, tmp_path):
     """The one-pass source validation keeps the old null semantics: a
     null key is one distinct value (one null key merges as an insert,
@@ -759,9 +841,10 @@ def test_merge_source_validation_null_semantics(spark, tmp_path):
 def test_manifest_schema_matches_inferred_read_schema(spark, tmp_path):
     """The manifest schema can stand in for footer inference: on a
     partitioned table with timestamp, date, decimal and string columns,
-    read()'s inferred schema equals the manifest's field for field
-    (names and types; nullability aside) after create, merge and
-    optimize."""
+    the schema Spark infers from the live files' footers equals the
+    manifest's field for field (names and types; nullability aside)
+    after create, merge and optimize, and read(), which takes the
+    manifest schema, makes every field nullable as file sources do."""
     import datetime as dt
     from decimal import Decimal
 
@@ -782,7 +865,10 @@ def test_manifest_schema_matches_inferred_read_schema(spark, tmp_path):
 
     def check():
         m = t._manifest(t.current_version())
-        assert fields(t.read().schema) == fields(SnapshotTable._schema(m))
+        inferred = spark.read.parquet(
+            *[os.path.join(t._ddir, e["file"]) for e in m["files"]]).schema
+        assert fields(inferred) == fields(SnapshotTable._schema(m))
+        assert all(f.nullable for f in t.read().schema.fields)
 
     check()
     src = spark.createDataFrame(
