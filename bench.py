@@ -1,9 +1,8 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric", "value", "unit", "legacy_headline_total",
-"queries", "sf"} — legacy_headline_total sums the r1-era HEADLINE set
-so the series stays comparable after the r6 full-registry widening.
+"""Benchmark harness: runs every driver registry entry at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric", "value",
+"unit", "queries", "sf"}.
 
 Execution is forced through the noop sink (full plan runs, nothing
 collected to the driver) — the honest measure of operator cost.
@@ -65,57 +64,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    # relational core
-    "a1_pricing_summary",
-    "a5_conditional_multi_distinct",
-    "a16_cube",
-    # joins
-    "j1_multiway_inner",
-    "j1_six_way_star",
-    "j4_broadcast_dims",
-    "j5_salted_skew_join",
-    "j6_split_skew_union",
-    "j15_asof_join",
-    # windows
-    "w5_window_vs_groupby_join",
-    "w6_ranking",
-    "w8_funnel_conversion",
-    "a20_percentiles",
-    # streaming batch forms
-    "t3_tumbling_window_batch",
-    "t5_session_window_batch",
-    "t6_interval_attribution_batch",
-    "t4_drift_filter_batch",
-    "t10_stream_batch_reconcile",
-    # profile/tag
-    "x3_pivot_wide_tags",
-    # LLM data pipeline
-    "llm_exact_dedup",
-    "llm_minhash_signature",
-    "llm_minhash_lsh_candidates",
-    "llm_ngram_near_dup",
-    "llm_dedup_keep",
-    "llm_simhash",
-    "llm_cosine_topk",
-    "llm_embed_near_dup",
-    "llm_semantic_dedup",
-    "llm_stratified_sample",
-    "llm_repetition",
-    "llm_contamination",
-    "llm_importance_weights",
-    # NOT benched: llm_ann_{lsh,ivf,ivfpq}_topk. LSH/IVF retrain per
-    # call; IVF-PQ caches its index (search-only after rep 1) but even
-    # its search path is fixed cogroup/Arrow startup at the 500-vector
-    # fixture (~4s of overhead, ~0 of data) — noise, not signal, until
-    # the embeddings fixture grows.
-]
-
 #: Former driver-registry entries that were folded into suites after
 #: being benched standalone. The bench contract never removes a key
 #: from the emitted ``queries`` dict, so these keep their own timed
-#: line (from QUERIES_RAW) without counting toward the legacy headline
-#: series. r14: llm_ffd_packing became a member of suite_packing.
+#: line (from QUERIES_RAW). r14: llm_ffd_packing became a member of
+#: suite_packing.
 BENCH_EXTRAS = [
     "llm_ffd_packing",
 ]
@@ -146,6 +99,7 @@ def load_prev_timings(path: str) -> dict[str, float]:
         m.group(1): float(m.group(2))
         for m in _re.finditer(r'"([A-Za-z0-9_]+)":\s?([0-9][0-9.]*)', tail)
     }
+    # legacy_headline_total: a retired key the committed artifacts carry
     for meta in ("n", "rc", "cpus", "sf", "value", "legacy_headline_total"):
         pairs.pop(meta, None)
     if not pairs:
@@ -328,14 +282,10 @@ def contended(probes: list[dict]) -> bool:
 
 def bench_set() -> list[tuple[str, object]]:
     """Every driver registry entry (suites count as one line each) plus
-    the legacy fine-grained headline queries not covered by a driver
-    key — so suite regressions are visible AND old per-query series
-    stay comparable round-over-round."""
+    the ``BENCH_EXTRAS`` former driver keys."""
     from datawarehouse_spark.queries import QUERIES, QUERIES_RAW
 
-    names = list(QUERIES) + [
-        h for h in HEADLINE + BENCH_EXTRAS if h not in QUERIES
-    ]
+    names = list(QUERIES) + [h for h in BENCH_EXTRAS if h not in QUERIES]
     return [(n, QUERIES.get(n) or QUERIES_RAW[n]) for n in names]
 
 
@@ -359,12 +309,11 @@ DRIVER_TAIL_BUDGET = 1950
 
 def compact_line(out: dict) -> str:
     """The stdout JSON line, guaranteed to fit the driver's tail
-    window: compact separators; if over budget, the legacy
-    fine-grained series lines (HEADLINE extras that are not driver
-    registry entries — they exist for round-over-round continuity and
-    live in full in the committed .benchmarks copy) drop out of the
-    stdout dict first, then per-query timings round 3 → 2 → 1
-    decimals. Everything the driver spec requires
+    window: compact separators; if over budget, the fine-grained lines
+    that are neither driver registry entries nor ``BENCH_EXTRAS`` (the
+    --members raw queries — they live in full in the committed
+    .benchmarks copy) drop out of the stdout dict first, then per-query
+    timings round 3 → 2 → 1 decimals. Everything the driver spec requires
     (metric/value/unit/queries/sf, with a queries entry for every
     registry name) always stays."""
     line = json.dumps(out, separators=(",", ":"))
@@ -394,9 +343,6 @@ def compact_line(out: dict) -> str:
             slim,
             queries={k: round(v, nd) for k, v in slim["queries"].items()},
         )
-        line = json.dumps(slim, separators=(",", ":"))
-    if len(line) > DRIVER_TAIL_BUDGET and "legacy_headline_total" in slim:
-        slim.pop("legacy_headline_total")
         line = json.dumps(slim, separators=(",", ":"))
     if len(line) > DRIVER_TAIL_BUDGET:
         # loud at run time, not only in the pinned registry-size test:
@@ -521,15 +467,10 @@ def main() -> None:
             "sf": sf_val,
         }
     else:
-        # the continuing round-over-round series: the fine-grained
-        # headline set benched since r1, so the full-registry widening
-        # (r6+) doesn't read as a regression of the historical total
-        legacy = round(sum(timings[n] for n in HEADLINE if n in timings), 3)
         out = {
             "metric": "headline_queries_total_sec",
             "value": total,
             "unit": "sec",
-            "legacy_headline_total": legacy,
             "queries": timings,
             "sf": sf_val,
         }

@@ -24,12 +24,16 @@ so every path here is a hash join, never an all-pairs product.
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from datawarehouse_spark.operators.partitioning import widen_narrow_input
+from datawarehouse_spark.operators.pin import pinned
 
 
 def tokens_col(text: str = "text") -> Column:
@@ -148,12 +152,9 @@ def lsh_candidates(sig: DataFrame, id_col: str = "doc_id", k: int = 8,
     the corpus; at the 100 TB regime where even that overflows,
     ``persist=False`` trades the memory for the recompute.
 
-    With ``persist=True`` the result is materialized eagerly
-    (``localCheckpoint``) and the banded-row cache is dropped in a
-    ``finally`` before returning — a long-lived session never
-    accumulates banded blocks waiting on the ContextCleaner; only the
-    far smaller candidate-pair result occupies storage, and it is
-    freed when the caller releases the DataFrame.
+    With ``persist=True`` the far smaller candidate-pair result is
+    materialized eagerly (``localCheckpoint``) while the banded rows
+    are pinned (:func:`~datawarehouse_spark.operators.pin.pinned`).
     """
     n_bands = k // band_size
     bands = F.array(
@@ -174,8 +175,6 @@ def lsh_candidates(sig: DataFrame, id_col: str = "doc_id", k: int = 8,
     exploded = sig.select(id_col, F.explode(bands).alias("b")).select(
         id_col, "b.band_idx", "b.band_key"
     )
-    if persist:
-        exploded = exploded.persist()
     a = exploded.alias("a")
     b = exploded.alias("b")
     cand = (
@@ -191,10 +190,8 @@ def lsh_candidates(sig: DataFrame, id_col: str = "doc_id", k: int = 8,
         .distinct()
     )
     if persist:
-        try:
+        with pinned(exploded):
             cand = cand.localCheckpoint(eager=True)
-        finally:
-            exploded.unpersist()
     return cand
 
 
@@ -216,13 +213,12 @@ def ngram_jaccard_pairs(
     hot-shingle list, so the cap costs one map-combined count pass plus
     a map-side filter, never a shuffle join against the keep-list.
 
-    ``persist=True`` (default) computes the shingle set once and
-    caches — measured 3-4× faster at sf0.1 — then materializes the
-    (far smaller) qualifying-pair result eagerly (``localCheckpoint``)
-    and drops the shingle cache in a ``finally`` before returning, so a
-    long-lived session never accumulates shingle blocks waiting on the
-    ContextCleaner. When the shingle set exceeds cluster cache (the
-    100 TB regime), pass ``persist=False`` — the capped path touches
+    ``persist=True`` (default) computes the shingle set once and pins
+    it (:func:`~datawarehouse_spark.operators.pin.pinned`) — measured
+    3-4× faster at sf0.1 — while the (far smaller) qualifying-pair
+    result is materialized eagerly (``localCheckpoint``). When the
+    shingle set exceeds cluster cache (the 100 TB regime), pass
+    ``persist=False`` — the capped path touches
     the shingle stream only three times (hot count, sizes, group), all
     single-pass aggregations.
 
@@ -247,69 +243,62 @@ def ngram_jaccard_pairs(
     # perturb a jaccard only when two distinct shingles of a compared
     # pair collide — ~n²/2⁶⁴, vanishing even at 100 TB shingle counts.
     sh = sh.select(id_col, F.xxhash64("s").alias("s"))
-    cached = None
-    if persist:
-        sh = cached = sh.persist()
-    if max_shingle_freq is not None:
-        hot = (
-            sh.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("_f"))
-            .filter(F.col("_f") > max_shingle_freq)
-            .select("s")
-        )
-        sh = sh.join(F.broadcast(hot), "s", "left_anti")
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    if max_shingle_freq is not None:
-        # bounded-group pair generation: one full-volume shuffle (the
-        # collect_list group-by) instead of two self-join sides; the
-        # (id_a < id_b) instance combinations are built inside a
-        # higher-order lambda (no per-row array duplication) and
-        # exploded once — the same rows the equi-join emitted
-        grp = sh.groupBy("s").agg(F.collect_list(F.col(id_col)).alias("_ids"))
-        combos = F.expr(
-            "flatten(transform(_ids, x ->"
-            " transform(filter(_ids, y -> y > x), y ->"
-            " named_struct('doc_a', x, 'doc_b', y))))"
-        )
-        inter = (
-            grp.select(F.explode(combos).alias("_p"))
-            .select("_p.doc_a", "_p.doc_b")
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("i"))
-        )
-    else:
-        a, b = sh.alias("a"), sh.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    with pinned(sh) if persist else nullcontext():
+        if max_shingle_freq is not None:
+            hot = (
+                sh.groupBy("s")
+                .agg(F.count(F.lit(1)).alias("_f"))
+                .filter(F.col("_f") > max_shingle_freq)
+                .select("s")
             )
-            .groupBy(
-                F.col(f"a.{id_col}").alias("doc_a"),
-                F.col(f"b.{id_col}").alias("doc_b"),
+            sh = sh.join(F.broadcast(hot), "s", "left_anti")
+        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+        if max_shingle_freq is not None:
+            # bounded-group pair generation: one full-volume shuffle (the
+            # collect_list group-by) instead of two self-join sides; the
+            # (id_a < id_b) instance combinations are built inside a
+            # higher-order lambda (no per-row array duplication) and
+            # exploded once — the same rows the equi-join emitted
+            grp = sh.groupBy("s").agg(F.collect_list(F.col(id_col)).alias("_ids"))
+            combos = F.expr(
+                "flatten(transform(_ids, x ->"
+                " transform(filter(_ids, y -> y > x), y ->"
+                " named_struct('doc_a', x, 'doc_b', y))))"
             )
-            .agg(F.count(F.lit(1)).alias("i"))
+            inter = (
+                grp.select(F.explode(combos).alias("_p"))
+                .select("_p.doc_a", "_p.doc_b")
+                .groupBy("doc_a", "doc_b")
+                .agg(F.count(F.lit(1)).alias("i"))
+            )
+        else:
+            a, b = sh.alias("a"), sh.alias("b")
+            inter = (
+                a.join(
+                    b,
+                    (F.col("a.s") == F.col("b.s"))
+                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+                )
+                .groupBy(
+                    F.col(f"a.{id_col}").alias("doc_a"),
+                    F.col(f"b.{id_col}").alias("doc_b"),
+                )
+                .agg(F.count(F.lit(1)).alias("i"))
+            )
+        sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("na"))
+        sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("nb"))
+        pairs = (
+            inter.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .withColumn(
+                "jaccard", F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
+            )
+            .filter(F.col("jaccard") >= threshold)
+            # no rounding: i/na/nb are identical integers in any engine, and
+            # IEEE double division of identical operands is bit-deterministic
+            .select("doc_a", "doc_b", "jaccard")
         )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("nb"))
-    pairs = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard", F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
-        )
-        .filter(F.col("jaccard") >= threshold)
-        # no rounding: i/na/nb are identical integers in any engine, and
-        # IEEE double division of identical operands is bit-deterministic
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    if cached is not None:
-        try:
-            pairs = pairs.localCheckpoint(eager=True)
-        finally:
-            cached.unpersist()
-    return pairs
+        return pairs.localCheckpoint(eager=True) if persist else pairs
 
 
 def dup_span_coverage(
@@ -338,16 +327,13 @@ def dup_span_coverage(
     agg exchanges aggregated partials while the join side exchanges raw
     rows, so ReuseExchange cannot dedupe the two subtrees and the
     corpus would explode twice — then eagerly materializes the per-doc
-    result and drops the cache in a ``finally`` (the
-    :func:`ngram_jaccard_pairs` contract).
+    result while the shingles are pinned
+    (:func:`~datawarehouse_spark.operators.pin.pinned`).
     """
     df = widen_narrow_input(df)  # guide §2.5: one-split sources must not map on one core
     sh = df.select(
         F.col(id_col), F.explode(shingles_col(text, n)).alias("s0")
     ).select(id_col, F.xxhash64("s0").alias("s"))
-    cached = None
-    if persist:
-        sh = cached = sh.persist()
     freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     out = (
         sh.join(freq, "s")
@@ -363,11 +349,9 @@ def dup_span_coverage(
             F.round(F.col("n_dup") / F.col("n_shingles"), 6).alias("dup_frac"),
         )
     )
-    if cached is not None:
-        try:
+    if persist:
+        with pinned(sh):
             out = out.localCheckpoint(eager=True)
-        finally:
-            cached.unpersist()
     return out
 
 
@@ -399,8 +383,8 @@ def dup_span_kept_ranges(
     two consumers (the frequency agg and the span join) otherwise each
     re-explode the corpus (their shuffle keys differ, so ReuseExchange
     cannot dedupe them) — then eagerly materializes the small
-    kept-range result and drops the cache in a ``finally``, same
-    contract as :func:`ngram_jaccard_pairs`.
+    kept-range result while the shingles are pinned
+    (:func:`~datawarehouse_spark.operators.pin.pinned`).
     """
     from pyspark.sql import Window as W
 
@@ -416,9 +400,6 @@ def dup_span_kept_ranges(
     pos_sh = df.select(
         F.col(id_col), F.posexplode(pos_shingles).alias("pos", "sh0")
     ).select(id_col, "pos", F.xxhash64("sh0").alias("s"))
-    cached = None
-    if persist:
-        pos_sh = cached = pos_sh.persist()
     # document frequency over DISTINCT per-doc shingles (a doc repeating
     # its own boilerplate doesn't make the shingle corpus-frequent)
     freq = (
@@ -452,11 +433,9 @@ def dup_span_kept_ranges(
         )
         .drop("g")
     )
-    if cached is not None:
-        try:
+    if persist:
+        with pinned(pos_sh):
             spans = spans.localCheckpoint(eager=True)
-        finally:
-            cached.unpersist()
     return spans
 
 
@@ -522,16 +501,6 @@ def exact_dup_spans(
         )
     sites_fn = _window_sites if impl == "md5" else _window_sites_rolling
     sites = sites_fn(df, id_col, text, min_len)
-    cached = None
-    if persist:
-        # DISK_ONLY: the positional site table is corpus×windows-sized;
-        # memory-caching it borrows unified memory from the frequency
-        # agg it feeds (at sf1 the md5+rolling suite union OOM'd the
-        # default heap through exactly that borrowing), and at 100 TB
-        # it could never live in memory anyway
-        from pyspark import StorageLevel
-
-        sites = cached = sites.persist(StorageLevel.DISK_ONLY)
     # ≥2 SITES (doc, pos) — within-doc repeats are duplicates too
     dup_h = (
         sites.groupBy("h").agg(F.count(F.lit(1)).alias("n"))
@@ -549,11 +518,14 @@ def exact_dup_spans(
         sites.join(dup_h.hint("shuffle_hash"), "h").select(id_col, "pos"),
         id_col, min_len,
     )
-    if cached is not None:
-        try:
+    if persist:
+        # DISK_ONLY: the positional site table is corpus×windows-sized;
+        # memory-caching it borrows unified memory from the frequency
+        # agg it feeds (at sf1 the md5+rolling suite union OOM'd the
+        # default heap through exactly that borrowing), and at 100 TB
+        # it could never live in memory anyway
+        with pinned(sites, StorageLevel.DISK_ONLY):
             spans = spans.localCheckpoint(eager=True)
-        finally:
-            cached.unpersist()
     return spans
 
 
@@ -817,64 +789,58 @@ def incremental_dedup(
     # by contract). DISK_ONLY: the stream is corpus-sized and must not
     # borrow unified memory from the joins it feeds. The hot-agg
     # broadcast materializes first and fills the cache; the anti-join
-    # consumers read it. Dropped in the finally after the
-    # increment-sized result is eagerly materialized.
-    from pyspark import StorageLevel
-
-    shc = shc.persist(StorageLevel.DISK_ONLY)
-    if max_shingle_freq is not None:
-        # hot is bounded (shingles whose corpus frequency exceeds the
-        # cap — the same table the broadcast holds anyway); pin it so
-        # the two anti-joins share one corpus scan + aggregation
-        # instead of each rebuilding it
-        hot = (
-            shc.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("_f"))
-            .filter(F.col("_f") > max_shingle_freq)
-            .select("s")
-            .localCheckpoint(eager=False)
+    # consumers read it.
+    with pinned(shc, StorageLevel.DISK_ONLY):
+        if max_shingle_freq is not None:
+            # hot is bounded (shingles whose corpus frequency exceeds the
+            # cap — the same table the broadcast holds anyway); pin it so
+            # the two anti-joins share one corpus scan + aggregation
+            # instead of each rebuilding it
+            hot = (
+                shc.groupBy("s")
+                .agg(F.count(F.lit(1)).alias("_f"))
+                .filter(F.col("_f") > max_shingle_freq)
+                .select("s")
+                .localCheckpoint(eager=False)
+            )
+            shn = shn.join(F.broadcast(hot), "s", "left_anti")
+            shc = shc.join(F.broadcast(hot), "s", "left_anti")
+        sizes_n = shn.groupBy(id_col).agg(F.count(F.lit(1)).alias("na"))
+        sizes_c = shc.groupBy(id_col).agg(F.count(F.lit(1)).alias("nb"))
+        inter = (
+            shn.alias("a")
+            .join(shc.alias("b"), F.col("a.s") == F.col("b.s"))
+            .groupBy(
+                F.col(f"a.{id_col}").alias("new_id"),
+                F.col(f"b.{id_col}").alias("corpus_id"),
+            )
+            .agg(F.count(F.lit(1)).alias("i"))
         )
-        shn = shn.join(F.broadcast(hot), "s", "left_anti")
-        shc = shc.join(F.broadcast(hot), "s", "left_anti")
-    sizes_n = shn.groupBy(id_col).agg(F.count(F.lit(1)).alias("na"))
-    sizes_c = shc.groupBy(id_col).agg(F.count(F.lit(1)).alias("nb"))
-    inter = (
-        shn.alias("a")
-        .join(shc.alias("b"), F.col("a.s") == F.col("b.s"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("new_id"),
-            F.col(f"b.{id_col}").alias("corpus_id"),
+        near = (
+            inter.join(sizes_n.withColumnRenamed(id_col, "new_id"), "new_id")
+            .join(sizes_c.withColumnRenamed(id_col, "corpus_id"), "corpus_id")
+            .withColumn(
+                "jaccard", F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
+            )
+            .filter(F.col("jaccard") >= threshold)
+            .groupBy("new_id")
+            .agg(F.count(F.lit(1)).alias("n_near"))
+            .withColumnRenamed("new_id", id_col)
         )
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    near = (
-        inter.join(sizes_n.withColumnRenamed(id_col, "new_id"), "new_id")
-        .join(sizes_c.withColumnRenamed(id_col, "corpus_id"), "corpus_id")
-        .withColumn(
-            "jaccard", F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
+        out = (
+            new.select(id_col)
+            .join(exact, id_col, "left")
+            .join(near, id_col, "left")
+            .select(
+                F.col(id_col),
+                F.coalesce(F.col("_de"), F.lit(False)).alias("dup_exact"),
+                (F.coalesce(F.col("n_near"), F.lit(0)) > 0).alias("dup_near"),
+            )
+            .withColumn("keep", ~F.col("dup_exact") & ~F.col("dup_near"))
         )
-        .filter(F.col("jaccard") >= threshold)
-        .groupBy("new_id")
-        .agg(F.count(F.lit(1)).alias("n_near"))
-        .withColumnRenamed("new_id", id_col)
-    )
-    out = (
-        new.select(id_col)
-        .join(exact, id_col, "left")
-        .join(near, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("_de"), F.lit(False)).alias("dup_exact"),
-            (F.coalesce(F.col("n_near"), F.lit(0)) > 0).alias("dup_near"),
-        )
-        .withColumn("keep", ~F.col("dup_exact") & ~F.col("dup_near"))
-    )
-    try:
         # increment-sized (one row per new doc) — cheap to pin, and it
         # lets the corpus-shingle cache drop deterministically
         return out.localCheckpoint(eager=True)
-    finally:
-        shc.unpersist()
 
 
 def simhash64(df: DataFrame, id_col: str = "doc_id", text: str = "text") -> DataFrame:
@@ -1161,9 +1127,8 @@ def prefix_filter_pairs(
         F.col(id_col), F.explode(shingles_col(text, n)).alias("s")
     ).select(id_col, F.xxhash64("s").alias("s"))
     # the exploded table feeds the df count AND the frequency join —
-    # caching it skips one full explode+hash pass (measured 36% off
-    # the whole operator at sf0.1); dropped in the finally below
-    sh = sh.persist()
+    # pinning it (at the checkpoint below) skips one full explode+hash
+    # pass (measured 36% off the whole operator at sf0.1)
     freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("c"))
     # per-doc shingle list ordered rarest-first: sort_array over
     # struct(c, s) sorts by frequency then shingle hash — a total
@@ -1180,10 +1145,8 @@ def prefix_filter_pairs(
             F.size("arr").alias("n_sh"),
         )
     )
-    # three consumers (prefix explode + both verify sides) — persist
-    # the per-doc arrays once and drop the cache in a finally, the
-    # ngram_jaccard_pairs discipline
-    docs = docs.persist()
+    # three consumers (prefix explode + both verify sides) — the
+    # per-doc arrays are pinned alongside the shingles below
     prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
     pref = docs.select(
         F.col(id_col),
@@ -1229,11 +1192,8 @@ def prefix_filter_pairs(
                 F.col("inter").cast("bigint").alias("inter"),
                 "jaccard")
     )
-    try:
+    with pinned(sh), pinned(docs):
         return verified.localCheckpoint(eager=True)
-    finally:
-        docs.unpersist()
-        sh.unpersist()
 
 
 def sorted_neighborhood_pairs(
@@ -1384,107 +1344,101 @@ def containment_pairs(
     # DISK_ONLY: the exploded shingle table is shuffle-sized, and
     # memory-caching it borrows unified memory from the joins it
     # feeds; at 100 TB this intermediate could never live in memory
-    from pyspark import StorageLevel
-
-    cached = sh.persist(StorageLevel.DISK_ONLY)
-    sh = cached
-    if max_shingle_freq is not None:
-        hot = (
-            sh.groupBy("s").agg(F.count(F.lit(1)).alias("_f"))
-            .filter(F.col("_f") > max_shingle_freq).select("s")
+    with pinned(sh, StorageLevel.DISK_ONLY):
+        if max_shingle_freq is not None:
+            hot = (
+                sh.groupBy("s").agg(F.count(F.lit(1)).alias("_f"))
+                .filter(F.col("_f") > max_shingle_freq).select("s")
+            )
+            sh = sh.join(F.broadcast(hot), "s", "left_anti")
+        # per-doc capped shingle arrays: the verify side (and n_sh sizes).
+        # r15 (guide §2.4 — don't recompute what you can pin): BOTH verify
+        # joins consume this table (aa and bb below), and without a pin
+        # each side re-runs the collect_list shuffle from the shingle
+        # cache — measured 2 × ~1.2 s at sf0.1, and at 100 TB two full
+        # extra passes over the exploded shingle stream. DISK_ONLY for the
+        # same reason as the shingle cache (it is corpus-sized and must
+        # not borrow unified memory from the verify joins); the count()
+        # forces materialization exactly once — its two consumers are
+        # INDEPENDENT AQE stages, so a lazy persist would let them race to
+        # recompute the shuffle before the cache fills (the
+        # triangle_stats lesson).
+        arrs = sh.groupBy(id_col).agg(
+            F.collect_list("s").alias("arr"),
+            F.count(F.lit(1)).alias("n_sh"),
         )
-        sh = sh.join(F.broadcast(hot), "s", "left_anti")
-    # per-doc capped shingle arrays: the verify side (and n_sh sizes).
-    # r15 (guide §2.4 — don't recompute what you can pin): BOTH verify
-    # joins consume this table (aa and bb below), and without a pin
-    # each side re-runs the collect_list shuffle from the shingle
-    # cache — measured 2 × ~1.2 s at sf0.1, and at 100 TB two full
-    # extra passes over the exploded shingle stream. DISK_ONLY for the
-    # same reason as the shingle cache (it is corpus-sized and must
-    # not borrow unified memory from the verify joins); the count()
-    # forces materialization exactly once — its two consumers are
-    # INDEPENDENT AQE stages, so a lazy persist would let them race to
-    # recompute the shuffle before the cache fills (the
-    # triangle_stats lesson).
-    arrs = sh.groupBy(id_col).agg(
-        F.collect_list("s").alias("arr"),
-        F.count(F.lit(1)).alias("n_sh"),
-    ).persist(StorageLevel.DISK_ONLY)
-    arrs.count()
-    # A-side prefix: rank each doc's shingles rarest-first by global
-    # (capped) document frequency; keep rank ≤ n_sh − ⌊t·n_sh⌋ + 1
-    freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
-    w = W.partitionBy(id_col).orderBy(F.asc("_df"), F.asc("s"))
-    # shuffle_hash-hint: freq is corpus-vocabulary-sized (one row per
-    # distinct shingle) — broadcastable at toy SFs only (at 100 TB the
-    # vocabulary is nowhere near broadcast-sized, and at sf1 building
-    # the broadcast exhausts the shared local-mode heap), and its
-    # per-partition hash slices are a few KB, so SHJ beats sorting the
-    # exploded shingle table
-    prefix = (
-        sh.join(freq.hint("shuffle_hash"), "s")
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn("_n", F.count(F.lit(1)).over(W.partitionBy(id_col)))
-        .filter(
-            F.col("_rn")
-            <= F.col("_n") - F.floor(F.lit(threshold) * F.col("_n")) + 1
-        )
-        .select(F.col(id_col).alias("doc_a"), "s")
-    )
-    # nomination: A-prefix rows against ALL of B, SHJ for the same
-    # reason as above (per-partition build slices of the exploded
-    # table are small; no sort of 2.6M-row streams)
-    cand = (
-        prefix.join(
-            sh.select(F.col(id_col).alias("doc_b"), "s").hint(
-                "shuffle_hash"
-            ),
-            "s",
-        )
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    aa = arrs.select(
-        F.col(id_col).alias("doc_a"),
-        F.col("arr").alias("arr_a"),
-        F.col("n_sh").alias("n_a"),
-    )
-    bb = arrs.select(
-        F.col(id_col).alias("doc_b"),
-        F.col("arr").alias("arr_b"),
-        F.col("n_sh").alias("n_b"),
-    )
-    # shuffle_hash-hint the verify joins, for two reasons: (a) the
-    # build side carries per-doc shingle ARRAYS — letting the planner
-    # broadcast it OOMs the shared local-mode heap at sf1, and a
-    # 100 TB corpus's array table could never broadcast; (b) sort-merge
-    # would SORT probe rows that carry a 400-byte array through the
-    # second join's exchange (1.3 GB of sort spill at sf1 → the
-    # spill-merge read buffers are exactly what OOM'd the default
-    # heap). A shuffled hash join builds only the per-partition slice
-    # of the doc-count-sized array table (KBs) and streams the probe
-    # side UNSORTED — no sorter ever holds array rows.
-    pairs = (
-        cand.join(aa.hint("shuffle_hash"), "doc_a")
-        .join(bb.hint("shuffle_hash"), "doc_b")
-        .withColumn(
-            "i", F.size(F.array_intersect("arr_a", "arr_b")).cast("bigint")
-        )
-        .withColumn("containment", F.col("i") / F.col("n_a"))
-        .filter(F.col("containment") >= threshold)
-        # exact: single IEEE division of identical integers
-        .select("doc_a", "doc_b",
-                F.col("n_a").cast("bigint").alias("n_a"),
-                F.col("n_b").cast("bigint").alias("n_b"),
-                F.col("i").alias("inter"),
-                "containment")
-    )
-    try:
-        return pairs.localCheckpoint(eager=True)
-    finally:
-        cached.unpersist()
-        arrs.unpersist()
+        with pinned(arrs, StorageLevel.DISK_ONLY):
+            arrs.count()
+            # A-side prefix: rank each doc's shingles rarest-first by global
+            # (capped) document frequency; keep rank ≤ n_sh − ⌊t·n_sh⌋ + 1
+            freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
+            w = W.partitionBy(id_col).orderBy(F.asc("_df"), F.asc("s"))
+            # shuffle_hash-hint: freq is corpus-vocabulary-sized (one row per
+            # distinct shingle) — broadcastable at toy SFs only (at 100 TB the
+            # vocabulary is nowhere near broadcast-sized, and at sf1 building
+            # the broadcast exhausts the shared local-mode heap), and its
+            # per-partition hash slices are a few KB, so SHJ beats sorting the
+            # exploded shingle table
+            prefix = (
+                sh.join(freq.hint("shuffle_hash"), "s")
+                .withColumn("_rn", F.row_number().over(w))
+                .withColumn("_n", F.count(F.lit(1)).over(W.partitionBy(id_col)))
+                .filter(
+                    F.col("_rn")
+                    <= F.col("_n") - F.floor(F.lit(threshold) * F.col("_n")) + 1
+                )
+                .select(F.col(id_col).alias("doc_a"), "s")
+            )
+            # nomination: A-prefix rows against ALL of B, SHJ for the same
+            # reason as above (per-partition build slices of the exploded
+            # table are small; no sort of 2.6M-row streams)
+            cand = (
+                prefix.join(
+                    sh.select(F.col(id_col).alias("doc_b"), "s").hint(
+                        "shuffle_hash"
+                    ),
+                    "s",
+                )
+                .filter(F.col("doc_a") != F.col("doc_b"))
+                .select("doc_a", "doc_b")
+                .distinct()
+            )
+            aa = arrs.select(
+                F.col(id_col).alias("doc_a"),
+                F.col("arr").alias("arr_a"),
+                F.col("n_sh").alias("n_a"),
+            )
+            bb = arrs.select(
+                F.col(id_col).alias("doc_b"),
+                F.col("arr").alias("arr_b"),
+                F.col("n_sh").alias("n_b"),
+            )
+            # shuffle_hash-hint the verify joins, for two reasons: (a) the
+            # build side carries per-doc shingle ARRAYS — letting the planner
+            # broadcast it OOMs the shared local-mode heap at sf1, and a
+            # 100 TB corpus's array table could never broadcast; (b) sort-merge
+            # would SORT probe rows that carry a 400-byte array through the
+            # second join's exchange (1.3 GB of sort spill at sf1 → the
+            # spill-merge read buffers are exactly what OOM'd the default
+            # heap). A shuffled hash join builds only the per-partition slice
+            # of the doc-count-sized array table (KBs) and streams the probe
+            # side UNSORTED — no sorter ever holds array rows.
+            pairs = (
+                cand.join(aa.hint("shuffle_hash"), "doc_a")
+                .join(bb.hint("shuffle_hash"), "doc_b")
+                .withColumn(
+                    "i", F.size(F.array_intersect("arr_a", "arr_b")).cast("bigint")
+                )
+                .withColumn("containment", F.col("i") / F.col("n_a"))
+                .filter(F.col("containment") >= threshold)
+                # exact: single IEEE division of identical integers
+                .select("doc_a", "doc_b",
+                        F.col("n_a").cast("bigint").alias("n_a"),
+                        F.col("n_b").cast("bigint").alias("n_b"),
+                        F.col("i").alias("inter"),
+                        "containment")
+            )
+            return pairs.localCheckpoint(eager=True)
 
 
 def novelty_scores(df: DataFrame, id_col: str = "doc_id",
@@ -1707,14 +1661,11 @@ def paragraph_dedup(
     ``persist=True`` caches the exploded block table — its two
     consumers (the canonical agg and the keeper join) exchange
     different shapes, so ReuseExchange cannot dedupe the explode —
-    then eagerly materializes the per-doc result and releases the
-    cache in a ``finally`` (the :func:`ngram_jaccard_pairs` contract).
+    then eagerly materializes the per-doc result while the blocks are
+    pinned (:func:`~datawarehouse_spark.operators.pin.pinned`).
     """
     blocks = _block_table(df, id_col, text, block_words, [], unit) \
         .withColumn("s", F.xxhash64("btxt"))
-    cached = None
-    if persist:
-        blocks = cached = blocks.persist()
     canon = blocks.groupBy("s").agg(
         F.min(F.struct(F.col(id_col), F.col("b"))).alias("first")
     )
@@ -1727,11 +1678,9 @@ def paragraph_dedup(
     )
     out = _reassemble_blocks(df, kept, id_col, text, block_words, [],
                              unit)
-    if cached is not None:
-        try:
+    if persist:
+        with pinned(blocks):
             out = out.localCheckpoint(eager=True)
-        finally:
-            cached.unpersist()
     return out
 
 
@@ -1773,9 +1722,6 @@ def boilerplate_block_removal(
     blocks = _block_table(df, id_col, text, block_words, [group_col],
                           unit) \
         .withColumn("s", F.xxhash64("btxt"))
-    cached = None
-    if persist:
-        blocks = cached = blocks.persist()
     freq = (
         blocks.select(group_col, "s", id_col).distinct()
         .groupBy(group_col, "s")
@@ -1787,11 +1733,9 @@ def boilerplate_block_removal(
     out = _reassemble_blocks(
         df, kept, id_col, text, block_words, [group_col], unit
     )
-    if cached is not None:
-        try:
+    if persist:
+        with pinned(blocks):
             out = out.localCheckpoint(eager=True)
-        finally:
-            cached.unpersist()
     return out
 
 
@@ -1931,13 +1875,11 @@ def edit_distance_pairs(
         F.col(id_col).alias("_id"),
         F.substring(F.col(text), 1, key_len).alias("key"),
     )
-    ids = ids.persist()
     keys = (
         ids.groupBy("key")
         .agg(F.min("_id").alias("kid"))
         .withColumn("klen", F.length("key"))
     )
-    keys = keys.persist()
     big = keys.filter(F.col("klen") >= cut)
 
     def seg_start(i, m):
@@ -2082,11 +2024,8 @@ def edit_distance_pairs(
         F.col("len_b").cast("bigint").alias("len_b"),
         F.col("dist").cast("bigint").alias("dist"),
     )
-    try:
+    with pinned(ids), pinned(keys):
         return verified.localCheckpoint(eager=True)
-    finally:
-        keys.unpersist()
-        ids.unpersist()
 
 
 def near_dup_bands(df: DataFrame, id_col: str = "doc_id",

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datawarehouse_spark.operators.pin import pinned
+
 #: damping factor and its complement — computed ONCE in Python and
 #: injected verbatim into both engines so the doubles agree bit-for-bit
 #: (writing `1 - 0.85` in one engine and `0.15` in the other yields two
@@ -65,12 +67,10 @@ def pagerank(pairs: DataFrame, id_a: str = "doc_a", id_b: str = "doc_b",
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"),
                             F.col(id_a).alias("dst")))
-        .persist()
     )
-    deg = None
-    try:
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")) \
-            .withColumnRenamed("src", "node").persist()
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")) \
+        .withColumnRenamed("src", "node")
+    with pinned(edges), pinned(deg):
         n_g = deg.count()
         # degree travels WITH the edge: r/deg needs no per-iteration
         # deg join, and the division is the same IEEE op on the same
@@ -119,10 +119,6 @@ def pagerank(pairs: DataFrame, id_a: str = "doc_a", id_b: str = "doc_b",
                 ranks = ranks.localCheckpoint(eager=False)
         out = ranks.select(F.col("node"), F.col("r").alias("pr"))
         return out.localCheckpoint(eager=True)
-    finally:
-        edges.unpersist()
-        if deg is not None:
-            deg.unpersist()
 
 
 def pagerank_oracle_sql(pairs_cte: str, n_iters: int = 10) -> str:
@@ -379,7 +375,7 @@ def triangle_stats(pairs: DataFrame, id_a: str = "doc_a",
     )
     # eagerly checkpointed like edges: three consumers (two degree
     # joins + the final output join) read the materialized id-sized
-    # table — a lazy persist would be dropped in the finally below
+    # table — a lazy pin would be released at the end of the call
     # BEFORE the returned DataFrame ever executes (r9 advisor), so
     # it never held data during the real job
     deg = (
@@ -635,9 +631,8 @@ def label_propagation(pairs: DataFrame, id_a: str = "doc_a",
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"),
                             F.col(id_a).alias("dst")))
-        .persist()
     )
-    try:
+    with pinned(edges):
         labels = edges.select(F.col("src").alias("node")).distinct() \
             .select("node", F.col("node").alias("lab"))
         for i in range(n_iters):
@@ -659,8 +654,6 @@ def label_propagation(pairs: DataFrame, id_a: str = "doc_a",
             F.count(F.lit(1)).cast("bigint").alias("comm_size"))
         return labels.join(sizes, "lab").select(
             "node", F.col("lab").alias("community"), "comm_size")
-    finally:
-        edges.unpersist()
 
 
 def lpa_oracle_sql(pairs_cte: str, n_iters: int = 4) -> str:

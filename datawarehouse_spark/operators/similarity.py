@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from datawarehouse_spark.operators.pin import pinned
+
 
 def dot_cols(a: str, b: str) -> Column:
     """Σ aᵢ·bᵢ in double — sequential fold, deterministic order."""
@@ -250,8 +252,7 @@ def kmeans_centroids(
     # persist so iterations hit memory, not the parquet scan — at
     # cluster scale this is the difference between n_iter scans of the
     # corpus and one
-    emb = emb.persist()
-    try:
+    with pinned(emb):
         cents = _kmeans_pp_init(emb, n_cells)
 
         for _ in range(n_iter):
@@ -298,8 +299,6 @@ def kmeans_centroids(
                 if norm > 0:
                     nxt[cell] = mean / norm
             cents = nxt
-    finally:
-        emb.unpersist()
     return cents.tolist()
 
 
@@ -642,158 +641,156 @@ def ivfpq_topk_grid(
             F.col(vec_col), lambda x: F.round(x.cast("double") / nrm, 6)
         )
     )
-    wide = corpus.select(
-        F.col(id_col).alias("vid"), nv.alias("nv")
-    ).persist()
+    wide = corpus.select(F.col(id_col).alias("vid"), nv.alias("nv"))
     ve = wide.select(
         "vid", F.posexplode("nv").alias("pos", "v")
     ).withColumn("sub", (F.col("pos") / dsub).cast("int"))
-    try:
-        # init codebooks: the ksub md5-lowest vectors, code = md5 rank.
-        # ONE TakeOrdered collect carries ids AND their nv components
-        # (formerly an id collect plus a second full-scan isin-filter
-        # collect over the exploded table — r14, guide §1.2);
-        # enumerate(nv) is exactly ve's (pos, v) for each vid.
-        init = (
-            wide.orderBy(F.md5(F.col("vid").cast("string")), "vid")
-            .limit(ksub)
-            .collect()
-        )
-        code_of = {r["vid"]: i for i, r in enumerate(init)}
-        books = [
-            (code_of[r["vid"]], pos, float(v))
-            for r in init
-            for pos, v in enumerate(r["nv"])
-        ]
-
-        def code_rows(book_rows):
-            """(vid, sub, code) via the Arrow GEMM kernel — same grid
-            arithmetic as the SQL/oracle shape (terms rounded to 6,
-            sums snapped to the grid, lowest-code ties)."""
-            by_sub: dict[int, dict[int, np.ndarray]] = {}
-            for code, pos, q in book_rows:
-                by_sub.setdefault(pos // dsub, {}).setdefault(
-                    code, np.zeros(dsub)
-                )[pos % dsub] = q
-            subs = []
-            for j in range(m):
-                cids = sorted(by_sub.get(j, {}))
-                B = (
-                    np.array([by_sub[j][c] for c in cids])
-                    if cids else np.zeros((0, dsub))
-                )
-                subs.append((np.array(cids, dtype="int32"), B))
-
-            @F.pandas_udf("array<int>")
-            def enc(vs: pd.Series) -> pd.Series:
-                X = np.vstack(vs.values)
-                out = np.empty((len(X), m), dtype="int32")
-                for j, (cids, B) in enumerate(subs):
-                    S = X[:, j * dsub:(j + 1) * dsub]
-                    D = np.round(
-                        (S[:, None, :] - B[None, :, :]) ** 2, 6
-                    ).sum(axis=2)
-                    out[:, j] = cids[np.argmin(np.round(D, 6), axis=1)]
-                return pd.Series(list(out))
-
-            return wide.select(
-                "vid", F.posexplode(enc(F.col("nv"))).alias("sub", "code")
-            )
-
-        for _ in range(iters):
-            pa = code_rows(books)
-            books = [
-                (r["code"], r["pos"], float(r["q"]))
-                for r in ve.join(pa, ["vid", "sub"])
-                .groupBy("code", "pos")
-                .agg(
-                    F.round(
-                        F.sum(F.col("v").cast(dec)).cast("double")
-                        / F.count(F.lit(1)),
-                        6,
-                    ).alias("q")
-                )
+    with pinned(wide):
+        try:
+            # init codebooks: the ksub md5-lowest vectors, code = md5 rank.
+            # ONE TakeOrdered collect carries ids AND their nv components
+            # (formerly an id collect plus a second full-scan isin-filter
+            # collect over the exploded table — r14, guide §1.2);
+            # enumerate(nv) is exactly ve's (pos, v) for each vid.
+            init = (
+                wide.orderBy(F.md5(F.col("vid").cast("string")), "vid")
+                .limit(ksub)
                 .collect()
+            )
+            code_of = {r["vid"]: i for i, r in enumerate(init)}
+            books = [
+                (code_of[r["vid"]], pos, float(v))
+                for r in init
+                for pos, v in enumerate(r["nv"])
             ]
 
-        # encode the corpus against the final books; the query side of
-        # the ADC table is the exact-decimal distance table restricted
-        # to query vids (tiny), so ADC sums replay in SQL verbatim
-        codes = code_rows(books)
-        cen = spark.createDataFrame(books, "code int, pos int, q double")
-        qd = (
-            ve.join(
-                F.broadcast(
-                    queries.select(F.col(id_col).alias("vid")).distinct()
-                ),
-                "vid",
-            )
-            .join(F.broadcast(cen), "pos")
-            .groupBy(
-                F.col("vid").alias("q_id"), "sub", "code"
-            )
-            .agg(
-                F.sum(
-                    F.round(
-                        (F.col("v") - F.col("q")) * (F.col("v") - F.col("q")),
-                        6,
-                    ).cast(dec)
-                ).cast("double").alias("d2")
-            )
-        )
-
-        # join the coarse chain — by now its Lloyd collects have run
-        # concurrently with the codebook training above
-        assign, probes = coarse_f.result()
-        cand = (
-            assign.select(
-                F.col(id_col).alias("n_id"), F.col("cluster").alias("cell")
-            )
-            .join(F.broadcast(probes), "cell")
-            .filter(F.col("q_id") != F.col("n_id"))
-            .select("q_id", "n_id")
-        )
-        adc = (
-            cand.join(
-                codes.select(F.col("vid").alias("n_id"), "sub", "code"),
-                "n_id",
-            )
-            .join(F.broadcast(qd), ["q_id", "sub", "code"])
-            .groupBy("q_id", "n_id")
-            .agg(
-                F.sum(F.col("d2").cast(dec)).cast("double").alias("adc")
-            )
-        )
-        ws = W.partitionBy("q_id").orderBy(F.asc("adc"), F.asc("n_id"))
-        short = (
-            adc.withColumn("sr", F.row_number().over(ws))
-            .filter(F.col("sr") <= shortlist * k)
-            .select("q_id", "n_id")
-        )
-        pairs = (
-            short.join(
-                corpus.select(
-                    F.col(id_col).alias("n_id"),
-                    F.col(vec_col).alias("c_vec"),
-                ),
-                "n_id",
-            )
-            .join(
-                F.broadcast(
-                    queries.select(
-                        F.col(id_col).alias("q_id"),
-                        F.col(vec_col).alias("q_vec"),
+            def code_rows(book_rows):
+                """(vid, sub, code) via the Arrow GEMM kernel — same grid
+                arithmetic as the SQL/oracle shape (terms rounded to 6,
+                sums snapped to the grid, lowest-code ties)."""
+                by_sub: dict[int, dict[int, np.ndarray]] = {}
+                for code, pos, q in book_rows:
+                    by_sub.setdefault(pos // dsub, {}).setdefault(
+                        code, np.zeros(dsub)
+                    )[pos % dsub] = q
+                subs = []
+                for j in range(m):
+                    cids = sorted(by_sub.get(j, {}))
+                    B = (
+                        np.array([by_sub[j][c] for c in cids])
+                        if cids else np.zeros((0, dsub))
                     )
-                ),
-                "q_id",
+                    subs.append((np.array(cids, dtype="int32"), B))
+
+                @F.pandas_udf("array<int>")
+                def enc(vs: pd.Series) -> pd.Series:
+                    X = np.vstack(vs.values)
+                    out = np.empty((len(X), m), dtype="int32")
+                    for j, (cids, B) in enumerate(subs):
+                        S = X[:, j * dsub:(j + 1) * dsub]
+                        D = np.round(
+                            (S[:, None, :] - B[None, :, :]) ** 2, 6
+                        ).sum(axis=2)
+                        out[:, j] = cids[np.argmin(np.round(D, 6), axis=1)]
+                    return pd.Series(list(out))
+
+                return wide.select(
+                    "vid", F.posexplode(enc(F.col("nv"))).alias("sub", "code")
+                )
+
+            for _ in range(iters):
+                pa = code_rows(books)
+                books = [
+                    (r["code"], r["pos"], float(r["q"]))
+                    for r in ve.join(pa, ["vid", "sub"])
+                    .groupBy("code", "pos")
+                    .agg(
+                        F.round(
+                            F.sum(F.col("v").cast(dec)).cast("double")
+                            / F.count(F.lit(1)),
+                            6,
+                        ).alias("q")
+                    )
+                    .collect()
+                ]
+
+            # encode the corpus against the final books; the query side of
+            # the ADC table is the exact-decimal distance table restricted
+            # to query vids (tiny), so ADC sums replay in SQL verbatim
+            codes = code_rows(books)
+            cen = spark.createDataFrame(books, "code int, pos int, q double")
+            qd = (
+                ve.join(
+                    F.broadcast(
+                        queries.select(F.col(id_col).alias("vid")).distinct()
+                    ),
+                    "vid",
+                )
+                .join(F.broadcast(cen), "pos")
+                .groupBy(
+                    F.col("vid").alias("q_id"), "sub", "code"
+                )
+                .agg(
+                    F.sum(
+                        F.round(
+                            (F.col("v") - F.col("q")) * (F.col("v") - F.col("q")),
+                            6,
+                        ).cast(dec)
+                    ).cast("double").alias("d2")
+                )
             )
-        )
-        return exact_rerank(pairs, k).localCheckpoint(eager=True)
-    finally:
-        # on the error path the coarse thread may still be running its
-        # bounded collects — wait it out so nothing leaks past the call
-        pool.shutdown(wait=True)
-        wide.unpersist()
+
+            # join the coarse chain — by now its Lloyd collects have run
+            # concurrently with the codebook training above
+            assign, probes = coarse_f.result()
+            cand = (
+                assign.select(
+                    F.col(id_col).alias("n_id"), F.col("cluster").alias("cell")
+                )
+                .join(F.broadcast(probes), "cell")
+                .filter(F.col("q_id") != F.col("n_id"))
+                .select("q_id", "n_id")
+            )
+            adc = (
+                cand.join(
+                    codes.select(F.col("vid").alias("n_id"), "sub", "code"),
+                    "n_id",
+                )
+                .join(F.broadcast(qd), ["q_id", "sub", "code"])
+                .groupBy("q_id", "n_id")
+                .agg(
+                    F.sum(F.col("d2").cast(dec)).cast("double").alias("adc")
+                )
+            )
+            ws = W.partitionBy("q_id").orderBy(F.asc("adc"), F.asc("n_id"))
+            short = (
+                adc.withColumn("sr", F.row_number().over(ws))
+                .filter(F.col("sr") <= shortlist * k)
+                .select("q_id", "n_id")
+            )
+            pairs = (
+                short.join(
+                    corpus.select(
+                        F.col(id_col).alias("n_id"),
+                        F.col(vec_col).alias("c_vec"),
+                    ),
+                    "n_id",
+                )
+                .join(
+                    F.broadcast(
+                        queries.select(
+                            F.col(id_col).alias("q_id"),
+                            F.col(vec_col).alias("q_vec"),
+                        )
+                    ),
+                    "q_id",
+                )
+            )
+            return exact_rerank(pairs, k).localCheckpoint(eager=True)
+        finally:
+            # on the error path the coarse thread may still be running its
+            # bounded collects — wait it out so nothing leaks past the call
+            pool.shutdown(wait=True)
 
 
 def ann_topk_lsh(
@@ -1110,8 +1107,7 @@ def prf_hybrid_topk(
     # ce feeds three consumers (centroid, query norm via centroid, and
     # candidate scoring) — persist the tiny q·k_cand·dim table once so
     # the BM25 candidate pipeline doesn't recompute per consumer;
-    # released deterministically after the eager checkpoint below
-    ce = ce.persist()
+    # pinned around the eager checkpoint below
     dec = "decimal(38,6)"
     cen = (
         ce.filter(F.col("bm25_rank") <= prf_depth)
@@ -1152,10 +1148,8 @@ def prf_hybrid_topk(
         sc.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)
     )
-    try:
+    with pinned(ce):
         return out.localCheckpoint(eager=True)
-    finally:
-        ce.unpersist()
 
 
 def _kmeans_remean(ve: DataFrame, assign: DataFrame) -> list:
@@ -1226,8 +1220,8 @@ def kmeans_assign(
     broadcast of the k·dim centroid table against the corpus, then the
     map-combined (cluster, pos) re-mean; the only driver sync per
     iteration is the k·dim centroid collect (bounded, like IVF's).
-    The corpus-side table is persisted once across all iterations and
-    released in a finally.
+    The corpus-side table is pinned once across all iterations
+    (:func:`~datawarehouse_spark.operators.pin.pinned`).
     """
     if impl not in ("gemm", "sql"):
         raise ValueError(f"impl must be 'gemm' or 'sql', got {impl!r}")
@@ -1237,13 +1231,13 @@ def kmeans_assign(
         F.transform(
             F.col(vec_col), lambda x: F.round(x.cast("double"), 6)
         ).alias("varr"),
-    ).persist()
+    )
     # exploded component view — pipelined off the persisted wide frame
     # (re-mean needs it every iteration; the sql engine also assigns
     # with it)
     ve = wide.select("vid", F.posexplode("varr").alias("pos", "v"))
     dec = "decimal(38,6)"
-    try:
+    with pinned(wide):
         # ONE TakeOrdered collect carries both the md5-order ids and
         # their k×dim vectors (formerly an id collect plus a second
         # full-scan isin-filter collect — r14, guide §1.2 job shape)
@@ -1364,8 +1358,6 @@ def kmeans_assign(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        wide.unpersist()
 
 
 def cluster_balanced_sample(

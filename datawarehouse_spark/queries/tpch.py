@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datawarehouse_spark.catalog import load_tables
+from datawarehouse_spark.operators.pin import pinned
 from datawarehouse_spark.queries.qutil import dsum, sql_davg, sql_dsum
 from datawarehouse_spark.queries.registry import query
 
@@ -468,10 +469,9 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     finding as dedup.lsh_candidates), and the alternative single-scan
     form (an unpartitioned window) funnels every per-supplier row
     through ONE task — a spill cliff when suppliers number billions.
-    Same eager-localCheckpoint + finally-unpersist discipline as
-    lsh_candidates, so no cached blocks outlive the call. Revenue
-    equality is exact: both engines produce the identical decimal-sum
-    double per qutil."""
+    The view is pinned (:func:`~datawarehouse_spark.operators.pin.pinned`)
+    around the result's eager checkpoint. Revenue equality is exact:
+    both engines produce the identical decimal-sum double per qutil."""
     t = load_tables(spark, sf_dir, ("lineitem", "supplier"))
     li = t["lineitem"].filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -480,7 +480,6 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue = (
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(dsum(_rev(), 4).alias("total_revenue"))
-        .persist()
     )
     top = revenue.agg(F.max("total_revenue").alias("max_rev"))
     out = (
@@ -489,11 +488,8 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(top), F.col("total_revenue") == F.col("max_rev"))
         .select("s_suppkey", "s_name", "total_revenue")
     )
-    try:
-        out = out.localCheckpoint(eager=True)
-    finally:
-        revenue.unpersist()
-    return out
+    with pinned(revenue):
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -831,7 +827,6 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("decimal(38,4)")
             ).alias("dval")
         )
-        .persist()
     )
     total = pv.agg(
         F.sum("dval").alias("dtotal"), F.count(F.lit(1)).alias("n_parts")
@@ -844,11 +839,8 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("l_partkey", F.col("dval").cast("double").alias("value"))
     )
-    try:
-        out = out.localCheckpoint(eager=True)
-    finally:
-        pv.unpersist()
-    return out
+    with pinned(pv):
+        return out.localCheckpoint(eager=True)
 
 
 @query(

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from datawarehouse_spark.catalog import load_tables
 from datawarehouse_spark.operators import graph, layout
+from datawarehouse_spark.operators.pin import pinned
 from datawarehouse_spark.queries.registry import query
 from datawarehouse_spark.sources import io as dwio
 
@@ -235,7 +236,7 @@ def a14_count_distinct_extraction(spark: SparkSession, sf_dir: str) -> DataFrame
     every branch's distinct count from it — one pass over the fact
     instead of one per branch. Oracle runs the naive per-branch form."""
     t = load_tables(spark, sf_dir, ("events",))
-    pairs = t["events"].select("user_id", "event_type").distinct().cache()
+    pairs = t["events"].select("user_id", "event_type").distinct()
     all_uv = pairs.agg(F.countDistinct("user_id").alias("uv")).select(
         F.lit("all").alias("scope"), "uv"
     )
@@ -247,7 +248,9 @@ def a14_count_distinct_extraction(spark: SparkSession, sf_dir: str) -> DataFrame
             .select(F.lit(ev).alias("scope"), "uv")
         )
 
-    return all_uv.unionAll(scoped("purchase")).unionAll(scoped("click"))
+    union = all_uv.unionAll(scoped("purchase")).unionAll(scoped("click"))
+    with pinned(pairs):
+        return union.localCheckpoint(eager=True)
 
 
 @query(

@@ -25,6 +25,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from datawarehouse_spark.operators.pin import pinned
 from datawarehouse_spark.session import apply_runtime_profile
 
 #: events schema as stored (parquet TIMESTAMP µs; read LTZ, wall clock = UTC)
@@ -445,14 +446,11 @@ def foreach_batch_fanout(stream_df: DataFrame, sinks: dict[str, str],
     column — free write-lineage."""
 
     def write_all(batch_df: DataFrame, epoch_id: int):
-        batch_df.persist()
-        try:
+        with pinned(batch_df):
             for fmt_path in sinks.values():
                 batch_df.write.mode("overwrite").parquet(
                     f"{fmt_path}/epoch={epoch_id}"
                 )
-        finally:
-            batch_df.unpersist()
 
     return (
         stream_df.writeStream.foreachBatch(write_all)

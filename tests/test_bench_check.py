@@ -59,7 +59,6 @@ def test_stdout_line_fits_driver_tail():
         "metric": "headline_queries_total_sec",
         "value": 9999.999,
         "unit": "sec",
-        "legacy_headline_total": 9999.999,
         "queries": {n: 88.888 for n in names},
         "sf": 0.1,
     }
@@ -71,8 +70,7 @@ def test_stdout_line_fits_driver_tail():
     parsed = json.loads(line)
     from datawarehouse_spark.queries import QUERIES as DRIVER
 
-    # every driver registry entry must survive compaction; only the
-    # legacy continuity extras may drop from the stdout line
+    # every driver registry entry must survive compaction
     assert set(DRIVER) <= set(parsed["queries"])
     assert set(parsed["queries"]) <= set(names)
 
@@ -205,7 +203,6 @@ def test_contended_flag_survives_compact_line_trims():
         "metric": "headline_queries_total_sec",
         "value": 1.0,
         "unit": "sec",
-        "legacy_headline_total": 1.0,
         "queries": {f"q{i:03d}": 0.123456 for i in range(120)},
         "sf": 0.1,
         "contended": True,

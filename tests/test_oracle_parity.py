@@ -68,8 +68,13 @@ def test_coverage_header_matches_registry():
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(spark, duck, name):
+    spark.catalog.clearCache()
     ok, msg = compare_query(spark, duck, QUERIES[name], ORACLES[name], SF_ORACLE)
     assert ok, f"{name}: {msg}"
+    # every pin is released by the time the entry returns
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name} left a cache entry behind"
+    )
 
 
 def test_no_rows_only_or_tests_only_queries():
