@@ -4,12 +4,34 @@ The reference's warehouse is layered Hive tables (ODS/DWD/DIM/DWS/ADS,
 docs/数据模型如何评论好坏.md:22); here the driver-provided parquet tables
 play the DWD/DIM roles. ``load_tables`` registers each as a temp view so
 both the DataFrame API and the SQL façade see the same catalog.
+
+The reference's tables take their schemas from a Hive metastore
+(docs/HiveSQL.md:42-55), so a query never re-derives one from the files.
+This module keeps the same role for the session: a schema store.
+
+- **What is cached:** each table path's ``StructType``, nothing else. No
+  DataFrame, plan or data is kept; every call builds a fresh relation
+  (fresh expression ids), so frames from two calls self-join.
+- **Key and validity:** the session, then the path. An entry is used only
+  while the path's fingerprint — ``(path, length, modification time)`` of
+  every leaf file, from the path's Hadoop ``FileSystem`` — and the
+  inference confs (``_INFERENCE_CONFS``) equal the ones it was inferred
+  under; otherwise the schema is inferred again and replaces it.
+- **Scope:** weakly keyed by the ``SparkSession`` object. A new session
+  (or the one built after ``stop()``) starts empty; nothing is shared
+  across sessions.
+- **Known limit:** a rewrite that keeps a file's length and lands within
+  the file system's mtime resolution is not seen.
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from datawarehouse_spark.session import apply_runtime_profile
 
@@ -32,18 +54,84 @@ TABLES = (
 BROADCAST_DIMS = {"region", "nation"}
 
 
+#: Session confs that change the schema Parquet footer inference yields.
+#: ``spark.sql.legacy.parquet.nanosAsLong`` and
+#: ``spark.sql.parquet.inferTimestampNTZ.enabled`` change it too, but
+#: ``apply_runtime_profile`` pins both on every ``load_tables`` call.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: session -> {path: ((fingerprint, inference confs), schema)}
+_SCHEMAS: weakref.WeakKeyDictionary[SparkSession, dict] = weakref.WeakKeyDictionary()
+_SCHEMAS_LOCK = threading.Lock()
+
+
 def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:
-    """Read fixture parquet tables and register them as temp views."""
+    """Read fixture parquet tables and register them as temp views.
+
+    Every frame is ``spark.read.schema(schema).parquet(path)``, a fresh
+    relation. The schema comes from the session's schema store (module
+    docstring): the first call for a path in a session runs Spark's
+    one-job footer inference; later calls run no job while the path's
+    files and the inference confs are unchanged, at the cost of one
+    recursive status listing of the path (O(leaf files) status calls).
+    Safe to call from several threads; at worst two of them infer the
+    same schema.
+    """
     apply_runtime_profile(spark)
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = hadoop_path(sf_dir).getFileSystem(
+        spark._jsparkSession.sessionState().newHadoopConf())
     out: dict[str, DataFrame] = {}
     for name in names:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        path = f"{sf_dir}/{name}.parquet"
+        key = (_fingerprint(fs, hadoop_path(path)), confs)
+        df = spark.read.schema(_schema(spark, path, key)).parquet(path)
         df = _normalize_nanos(df)
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def _schema(spark: SparkSession, path: str, key: tuple) -> StructType:
+    """The path's inferred schema: from the session's store when it was
+    inferred under the same ``key`` (fingerprint, inference confs),
+    else inferred now and stored. ``key`` is taken before inferring, so
+    files that change in between are re-inferred on the next call."""
+    with _SCHEMAS_LOCK:
+        store = _SCHEMAS.setdefault(spark, {})
+        hit = store.get(path)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    with _SCHEMAS_LOCK:
+        store[path] = (key, schema)
+    return schema
+
+
+def _fingerprint(fs, hpath) -> tuple:
+    """``(path, length, mtime)`` of every leaf file under the Hadoop
+    path ``hpath`` (the file itself for a single-file path: ``listStatus``
+    of a file returns its own status). ``listStatus``, not
+    ``listFiles``: ``listFiles`` also looks up each file's block
+    locations, unused here, which on the local file system cost ~4 ms per
+    file against ~0.5 ms for this walk (measured on a 4-core x86 VM)."""
+    out = []
+    pending = [hpath]
+    while pending:
+        for st in fs.listStatus(pending.pop()):
+            if st.isDirectory():
+                pending.append(st.getPath())
+            else:
+                out.append((st.getPath().toString(), st.getLen(),
+                            st.getModificationTime()))
+    return tuple(sorted(out))
 
 
 def _normalize_nanos(df: DataFrame) -> DataFrame:

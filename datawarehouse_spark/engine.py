@@ -8,7 +8,7 @@ docs/sql调优.md:93-113), and the diagnosis utilities.
 
     dw = DataWarehouse(base_path="/data/warehouse")
     dw.register_sources("/root/testdata/sf0.01")
-    df = dw.sql("SELECT ... FROM dwd.lineitem ...")
+    df = dw.sql("SELECT ... FROM lineitem ...")  # sources are bare temp views
     dw.materialize(df, layer="dws", table="daily_rev", partition_by=["dt"])
 """
 
@@ -74,8 +74,8 @@ class DataWarehouse:
 
     # -- catalog ---------------------------------------------------------
     def register_sources(self, sf_dir: str) -> dict[str, DataFrame]:
-        """Register the fixture tables as both bare temp views and
-        dwd/dim-layer names."""
+        """Register the fixture tables as bare temp views (``lineitem``,
+        not ``dwd.lineitem``): the layer databases start empty."""
         tables = load_tables(self.spark, sf_dir, TABLES)
         return tables
 

@@ -6,12 +6,12 @@ from __future__ import annotations
 
 import glob
 import os
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from datawarehouse_spark.sources.snapshot import ConcurrentCommitError, SnapshotTable
+from tests.jobcount import jobs_and_tasks
 
 
 def _mk(spark, tmp_path, partitioned=True):
@@ -656,25 +656,6 @@ def test_shallow_clone_zero_copy_and_independent_evolution(spark, tmp_path):
         c.read(version=1).filter(F.col("dt") == "d1").count()
 
 
-def _jobs_and_tasks(spark, fn):
-    """(jobs, tasks run) of the Spark work ``fn`` launches, counted
-    through a job group and the status tracker."""
-    sc = spark.sparkContext
-    group = f"snapshot-pin-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "snapshot job-count pin")
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    st = sc.statusTracker()
-    jobs = st.getJobIdsForGroup(group)
-    stages = {s for j in jobs for s in st.getJobInfo(j).stageIds}
-    tasks = sum(info.numCompletedTasks for info in map(st.getStageInfo, stages)
-                if info is not None)
-    return len(jobs), tasks
-
-
 def _month_table(spark, path, n_parts):
     """One file per partition value (coalesce(1)), so the file count —
     and every listing over it — is n_parts whatever the core count."""
@@ -700,7 +681,7 @@ def test_merge_job_count_independent_of_untouched_partitions(spark, tmp_path):
     for n_parts in (40, 80):
         t = _month_table(spark, str(tmp_path / f"m{n_parts}"), n_parts)
         src = spark.createDataFrame(src_rows, "k long, val long, pt string")
-        counts[n_parts] = _jobs_and_tasks(spark, lambda: t.merge(src, on="k"))
+        counts[n_parts] = jobs_and_tasks(spark, lambda: t.merge(src, on="k"))
         got = {(r.k, r.val) for r in t.read().filter("pt IN ('p001', 'p002')")
                .collect()}
         assert {(1, -1), (2, -2), (10_000, 7)} <= got
@@ -731,12 +712,12 @@ def test_read_job_count_independent_of_live_files(spark, tmp_path):
         builds, reads, optimizes = {}, {}, {}
         for n_parts in (40, 80):
             t = _month_table(spark, str(tmp_path / f"r{n_parts}"), n_parts)
-            builds[n_parts] = _jobs_and_tasks(spark, t.read)
+            builds[n_parts] = jobs_and_tasks(spark, t.read)
             n = {}
-            reads[n_parts] = _jobs_and_tasks(
+            reads[n_parts] = jobs_and_tasks(
                 spark, lambda: n.update(rows=t.read().count()))
             assert n["rows"] == n_parts * 10
-            optimizes[n_parts] = _jobs_and_tasks(spark, t.optimize)
+            optimizes[n_parts] = jobs_and_tasks(spark, t.optimize)
             assert t.read().count() == n_parts * 10
     finally:
         if old is None:
