@@ -14,7 +14,7 @@ giving optimistic concurrency — the loser retries on a fresh version).
 
 Why this scales to 100 TB: data files are never rewritten in place and
 never deleted by a commit (only by an explicit `vacuum` of unreferenced
-files), upserts rewrite only the files of **touched partitions**
+files), merges rewrite only the files of **touched partitions**
 (manifest partition pruning — O(changed data), not O(table)), and the
 manifest itself is O(file count) JSON — for >10⁶ files the same design
 shards the manifest, which is exactly Iceberg's manifest-list layer.
@@ -25,14 +25,21 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 #: the block size Hadoop's local filesystem reports for every file
 #: (``fs.local.block.size``), recorded in the statuses _scan builds
 _LOCAL_BLOCK_SIZE = 32 * 1024 * 1024
+
+#: lost commit races a write re-runs before ConcurrentCommitError
+#: reaches its caller (see SnapshotTable._commit_next)
+_MAX_RETRIES = 3
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -90,14 +97,17 @@ class SnapshotTable:
         is resolved NOW, so the returned frame keeps seeing this
         snapshot even if later versions commit (files are immutable and
         survive until `vacuum`). `partitions` prunes via the manifest —
-        untouched files are never opened.
+        untouched files are never opened. A ``version`` with no
+        manifest (never committed, or vacuumed) raises
+        ``FileNotFoundError``.
 
         Scale shape: O(selected files) metadata, all of it from the
         manifest plus one local ``stat`` per file (see :meth:`_scan`);
         no Spark job runs before the frame executes, whatever the live
         file count. A file already deleted by ``vacuum`` raises
         ``FileNotFoundError`` here, at call time."""
-        m = self._manifest(version or self.current_version())
+        m = self._manifest(
+            self.current_version() if version is None else version)
         entries = m["files"]
         if partitions is not None:
             want = {str(p) for p in partitions}
@@ -156,60 +166,34 @@ class SnapshotTable:
         )
         return DataFrame(jss.baseRelationToDataFrame(relation), self.spark)
 
-    def _touched(self, m: dict, parts: set[str] | None
-                 ) -> tuple[DataFrame, list[dict]]:
-        """Split manifest ``m`` for a partition-local rewrite: a
-        :meth:`_scan` of the files whose partition value (as ``str``) is
-        in ``parts`` — every file when ``parts`` is None — and the
-        untouched entries the next version carries over verbatim."""
-        if parts is None:
-            touched, kept = m["files"], []
-        else:
-            touched = [e for e in m["files"] if str(e["partition"]) in parts]
-            kept = [e for e in m["files"] if str(e["partition"]) not in parts]
-        return self._scan(m, touched), kept
-
     # -- write ------------------------------------------------------------
     def _stage(self, df: DataFrame) -> list[dict]:
         """Write df's rows as new immutable files; return manifest
-        entries. Partitioned tables stage via partitionBy so each file
-        carries one partition value (recorded in the entry; the column
-        itself is re-attached from the manifest at read)."""
+        entries. Partitioned tables stage via partitionBy on a DUPLICATE
+        ``__pv`` column, so each file carries one partition value, taken
+        from its ``__pv=`` directory name (None on unpartitioned
+        tables), while the real partition column stays inside the data
+        files — read() then needs no dir parsing or column
+        re-attachment."""
         staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
         entries: list[dict] = []
         try:
             if self.partition_col:
-                # stage via a DUPLICATE dir-encoding column so the real
-                # partition column stays inside the data files — read()
-                # then needs no dir parsing or column re-attachment
-                from pyspark.sql import functions as F
-
                 df.withColumn("__pv", F.col(self.partition_col)) \
                     .write.partitionBy("__pv").parquet(staging)
-                for dirpath, _dirs, files in os.walk(staging):
-                    base = os.path.basename(dirpath)
-                    if "=" not in base:
-                        continue
-                    pval = base.split("=", 1)[1]
-                    for f in files:
-                        if not f.endswith(".parquet"):
-                            continue
-                        name = f"part-{uuid.uuid4().hex}.parquet"
-                        os.rename(os.path.join(dirpath, f),
-                                  os.path.join(self._ddir, name))
-                        entries.append({"file": name, "partition": pval})
             else:
                 df.write.parquet(staging)
-                for f in os.listdir(staging):
+            for dirpath, _dirs, files in os.walk(staging):
+                base = os.path.basename(dirpath)
+                pval = base.split("=", 1)[1] if base.startswith("__pv=") else None
+                for f in files:
                     if not f.endswith(".parquet"):
                         continue
                     name = f"part-{uuid.uuid4().hex}.parquet"
-                    os.rename(os.path.join(staging, f),
+                    os.rename(os.path.join(dirpath, f),
                               os.path.join(self._ddir, name))
-                    entries.append({"file": name, "partition": None})
+                    entries.append({"file": name, "partition": pval})
         finally:
-            import shutil
-
             shutil.rmtree(staging, ignore_errors=True)
         return entries
 
@@ -231,63 +215,58 @@ class SnapshotTable:
         finally:
             os.unlink(tmp)
 
-    def append(self, df: DataFrame, max_retries: int = 3) -> int:
+    def _commit_next(
+        self, attempt: Callable[[dict], tuple[list[dict], str]]
+    ) -> int:
+        """Commit the next version: the one commit loop of every writer
+        of an existing table; returns the version committed.
+
+        Each pass resolves the current version ``v`` and its manifest
+        ``m``, calls ``attempt(m) -> (entries, schema_json)`` and
+        commits them as ``v + 1``. When another writer wins that
+        version, the pass re-runs against the winner's snapshot, up to
+        ``_MAX_RETRIES`` times; then the ConcurrentCommitError reaches
+        the caller. Writers whose content depends on the snapshot they
+        read (merge, delete, optimize) build it inside ``attempt``, so a
+        retry re-reads the winner's files (Delta's MERGE conflict
+        semantics); append and overwrite stage their files once, before
+        the loop (immutable, uniquely named files are valid under any
+        base version). Files staged by a lost pass are referenced by no
+        manifest and die at the next ``vacuum``."""
+        for retry in range(_MAX_RETRIES + 1):
+            v = self.current_version()
+            entries, schema_json = attempt(self._manifest(v))
+            try:
+                self._commit(v + 1, entries, schema_json)
+                return v + 1
+            except ConcurrentCommitError:
+                if retry == _MAX_RETRIES:
+                    raise
+
+    def append(self, df: DataFrame) -> int:
         """New version = old file set + newly staged files.
 
-        Optimistic concurrency with retry: files are staged ONCE (they
-        are immutable and uniquely named, so they are valid under any
-        base version), then the manifest commit is retried against the
-        freshest version up to ``max_retries`` times when another
-        writer wins the race. Appends commute, so a retry needs no
-        re-merge — the Delta/Iceberg blind-append fast path."""
+        The files are staged ONCE, before the commit loop
+        (:meth:`_commit_next` holds the retry contract): appends
+        commute, so a lost race re-commits the same files on top of the
+        winner's version with no re-merge — the Delta/Iceberg
+        blind-append fast path."""
         staged = self._stage(df)
-        last: ConcurrentCommitError | None = None
-        for _ in range(max_retries + 1):
-            v = self.current_version()
-            m = self._manifest(v)
-            try:
-                self._commit(v + 1, m["files"] + staged, m["schema"])
-                return v + 1
-            except ConcurrentCommitError as exc:
-                last = exc
-        raise last
+        return self._commit_next(lambda m: (m["files"] + staged, m["schema"]))
 
     def overwrite(self, df: DataFrame) -> int:
-        v = self.current_version()
-        self._commit(v + 1, self._stage(df), df.schema.json())
-        return v + 1
+        staged, schema_json = self._stage(df), df.schema.json()
+        return self._commit_next(lambda m: (staged, schema_json))
 
-    def upsert(self, updates: DataFrame, key: str, max_retries: int = 3) -> int:
-        """MERGE: updated keys replace current rows, new keys append —
-        rewriting only the files of TOUCHED partitions (manifest
-        pruning). Kudu partition-local upsert semantics
-        (docs/kudu.md:19): on partitioned tables `updates` must carry
-        the partition column and keys must not move partitions.
-
-        On a lost commit race the WHOLE merge re-runs against the new
-        current version (unlike append, the merged content depends on
-        the snapshot it read — Delta's MERGE conflict semantics);
-        files staged by the losing attempt become unreferenced and die
-        at the next `vacuum`."""
-        parts = None
-        if self.partition_col:
-            parts = {str(r[0]) for r in
-                     updates.select(self.partition_col).distinct().collect()}
-        last: ConcurrentCommitError | None = None
-        for _ in range(max_retries + 1):
-            v = self.current_version()
-            m = self._manifest(v)
-            cur, kept = self._touched(m, parts)
-            merged = cur.join(
-                updates.select(key).distinct(), [key], "left_anti"
-            ).unionByName(updates.select(*cur.columns))
-            entries = kept + self._stage(merged)
-            try:
-                self._commit(v + 1, entries, m["schema"])
-                return v + 1
-            except ConcurrentCommitError as exc:
-                last = exc
-        raise last
+    def upsert(self, updates: DataFrame, key: str) -> int:
+        """Kudu-style upsert (docs/kudu.md:19): updated keys replace
+        their current rows whole, new keys append. This is
+        :meth:`merge` with its defaults — whole-row update, insert
+        unmatched, no delete — so it carries merge's contract: a unique
+        ``key`` in ``updates``, the partition column on partitioned
+        tables (keys must not move partitions), and a rewrite of only
+        the touched partitions' files."""
+        return self.merge(updates, key)
 
     def merge(
         self,
@@ -297,11 +276,9 @@ class SnapshotTable:
         update_when: str | None = None,
         delete_when: str | None = None,
         insert_unmatched: bool = True,
-        max_retries: int = 3,
     ) -> int:
-        """Full ``MERGE INTO`` (Delta/Iceberg/ANSI semantics — the
-        general form of :meth:`upsert`, which is
-        ``merge(src, key)`` with whole-row replacement):
+        """Full ``MERGE INTO`` (Delta/Iceberg/ANSI semantics;
+        :meth:`upsert` is the call with every clause at its default):
 
         * WHEN MATCHED [AND ``delete_when``] THEN DELETE — evaluated
           first, like Delta's clause ordering;
@@ -316,13 +293,15 @@ class SnapshotTable:
         The source must be UNIQUE on ``on`` — multiple source matches
         for one target row make MERGE nondeterministic, so that is a
         loud ValueError exactly as Delta raises. Expressed as ONE
-        full-outer join + projection over the touched file set (the
-        same manifest partition pruning and optimistic-retry contract
-        as :meth:`upsert`: on partitioned tables the source must carry
-        the partition column and keys must not move partitions).
-        Target rows matched by no source row and source rows matched
-        by no target row ride through the same join — no second pass,
-        no window.
+        full-outer join + projection over the touched file set: on a
+        partitioned table the source must carry the partition column,
+        keys must not move partitions, and only the files of the
+        partition values the source holds are read and rewritten; the
+        other entries carry over to the next version verbatim (manifest
+        partition pruning). Target rows matched by no source row and
+        source rows matched by no target row ride through the same
+        join — no second pass, no window. A lost commit race re-runs
+        the join against the winner's version (:meth:`_commit_next`).
 
         Scale shape: one source aggregate (row count, distinct keys and
         touched partition values, computed once, outside the retry
@@ -330,32 +309,21 @@ class SnapshotTable:
         Target columns, the read schema and the file list come from the
         manifest, so nothing scales with the untouched files: no
         listing of them and no footer inference."""
-        from pyspark.sql import functions as F
-
         # _t/_s are the internal match markers injected below; a user
         # column of either name would be silently REPLACED by the
         # withColumn (Spark resolves case-insensitively by default) and
         # every rewritten row committed with the marker literal — the
         # same loud-failure rule optimize() applies to its __zo/z* names
-        reserved = {"_t", "_s"}
-        tcols = self._schema(self._manifest(self.current_version())).names
-        for side, colset in (("target", tcols), ("source", source.columns)):
-            hit = [c for c in colset if c.lower() in reserved]
+        def reject_markers(side: str, cols: list[str]) -> None:
+            hit = [c for c in cols if c.lower() in ("_t", "_s")]
             if hit:
                 raise ValueError(
                     f"merge: {side} column(s) {hit} collide with merge's "
                     "internal match markers (_t, _s; case-insensitive) — "
                     "rename them before merging"
                 )
-        if update_set is not None:
-            unknown = sorted(set(update_set) - set(tcols))
-            if unknown:
-                raise ValueError(
-                    f"merge: update_set names unknown target column(s) "
-                    f"{unknown} — a typo here would otherwise commit a "
-                    "version with no update applied (Delta raises an "
-                    "unresolved-column error for the same mistake)"
-                )
+
+        reject_markers("source", source.columns)
         # one aggregate validates the source and finds the partitions it
         # touches; struct() keeps nulls countable: a null key is one
         # distinct value, a null partition value becomes "None" as str()
@@ -371,14 +339,27 @@ class SnapshotTable:
                 "pre-aggregate the source)"
             )
         parts = {str(r[0]) for r in pv[0]} if pv else None
-        last: ConcurrentCommitError | None = None
-        for _ in range(max_retries + 1):
-            v = self.current_version()
-            m = self._manifest(v)
-            cur, kept = self._touched(m, parts)
-            cols = cur.columns
+
+        def attempt(m: dict) -> tuple[list[dict], str]:
+            # the target checks run per pass: they hold for the version
+            # this pass merges into, not for one read before the race
+            cols = self._schema(m).names
+            reject_markers("target", cols)
+            unknown = sorted(set(update_set or ()) - set(cols))
+            if unknown:
+                raise ValueError(
+                    f"merge: update_set names unknown target column(s) "
+                    f"{unknown} — a typo here would otherwise commit a "
+                    "version with no update applied (Delta raises an "
+                    "unresolved-column error for the same mistake)"
+                )
+            if parts is None:
+                touched, kept = m["files"], []
+            else:
+                touched = [e for e in m["files"] if str(e["partition"]) in parts]
+                kept = [e for e in m["files"] if str(e["partition"]) not in parts]
             j = (
-                cur.withColumn("_t", F.lit(1)).alias("t")
+                self._scan(m, touched).withColumn("_t", F.lit(1)).alias("t")
                 .join(
                     source.withColumn("_s", F.lit(1)).alias("s"),
                     F.col(f"t.{on}") == F.col(f"s.{on}"),
@@ -415,23 +396,21 @@ class SnapshotTable:
                 .otherwise(F.lit(insert_unmatched))
             )
             merged = j.filter(keep_row).select(*out_cols)
-            entries = kept + self._stage(merged)
-            try:
-                self._commit(v + 1, entries, m["schema"])
-                return v + 1
-            except ConcurrentCommitError as exc:
-                last = exc
-        raise last
+            return kept + self._stage(merged), m["schema"]
+
+        return self._commit_next(attempt)
 
     def delete(self, predicate) -> int:
-        """DELETE WHERE predicate — full logical rewrite expressed as a
-        new snapshot; at scale, pre-prune to touched partitions with a
-        partition predicate (same shape as upsert)."""
-        v = self.current_version()
-        m = self._manifest(v)
-        survivors = self.read(v).filter(~predicate)
-        self._commit(v + 1, self._stage(survivors), m["schema"])
-        return v + 1
+        """DELETE WHERE predicate — the next version holds every live
+        row the predicate rejects. It reads and rewrites EVERY live
+        file: there is no partition pruning, so a predicate on the
+        partition column still restages the whole table (merge with
+        ``delete_when`` rewrites only the touched partitions). A lost
+        commit race re-runs the filter over the winner's version."""
+        return self._commit_next(lambda m: (
+            self._stage(self._scan(m, m["files"]).filter(~predicate)),
+            m["schema"],
+        ))
 
     def optimize(self, zorder_by: list[str] | None = None,
                  target_rows_per_file: int = 1_000_000) -> int:
@@ -441,7 +420,8 @@ class SnapshotTable:
         row-identical — only layout changes — so pinned readers and
         time travel to every earlier version are untouched, and the
         rewritten files die only at the next ``vacuum`` (same
-        immutability contract as every other commit).
+        immutability contract as every other commit). A lost commit
+        race re-packs the winner's version.
 
         ``zorder_by`` sorts the rewrite by the interleaved Morton key
         (operators/layout.py::zorder_key) via a RANGE repartition, so
@@ -459,69 +439,67 @@ class SnapshotTable:
         output split holds one value (boundary splits at most two —
         ≤ one extra file per value) and oversized values still split;
         the rewrite preserves dir-encoded partition pruning."""
-        from pyspark.sql import functions as F
-
         from datawarehouse_spark.operators.layout import zorder_key
 
-        v = self.current_version()
-        m = self._manifest(v)
-        cur = self.read(v)
-        n = cur.count()
-        n_files = max(1, -(-n // int(target_rows_per_file)))
-        zdrop: list[str] = []
-        if zorder_by:
-            # zorder_key injects __zo plus z1..zN scratch columns via
-            # withColumn, which silently REPLACES a same-named user
-            # column (case-insensitively, under Spark's default
-            # resolution) — and the post-pack drop would then delete
-            # the user's data from the committed version. Loud failure
-            # instead, same convention as sql_qualify's __q guard and
-            # rank.py's _guard_internal_collisions.
-            reserved = {"__zo"} | {
-                f"z{i + 1}" for i in range(len(zorder_by))
-            }
-            hit = [c for c in cur.columns if c.lower() in reserved]
-            if hit:
-                raise ValueError(
-                    "optimize(zorder_by=...): table columns "
-                    f"{hit} collide with the Z-order scratch names "
-                    f"{sorted(reserved)} — rename them first (the "
-                    "rewrite would otherwise drop the user column's "
-                    "data from the new version)"
-                )
-            cur = zorder_key(cur, zorder_by, out_col="__zo")
-            zdrop = ["__zo"] + [f"z{i + 1}" for i in range(len(zorder_by))]
-        if self.partition_col:
-            # RANGE over (partition value, cluster key): each Spark
-            # partition then holds ONE value (boundary partitions at
-            # most two), so _stage's partitionBy split adds at most
-            # one extra file per value instead of fanning every value
-            # across every Spark partition; oversized values still
-            # split across range boundaries (equal leading keys are
-            # separable on the second key)
-            second = F.col("__zo") if zorder_by else F.xxhash64(
-                *[F.col(c) for c in cur.columns]
-            )
-            packed = cur.repartitionByRange(
-                n_files, F.col(self.partition_col), second
-            )
+        def attempt(m: dict) -> tuple[list[dict], str]:
+            cur = self._scan(m, m["files"])
+            n = cur.count()
+            n_files = max(1, -(-n // int(target_rows_per_file)))
+            zdrop: list[str] = []
             if zorder_by:
-                packed = packed.sortWithinPartitions(
-                    self.partition_col, "__zo"
+                # zorder_key injects __zo plus z1..zN scratch columns via
+                # withColumn, which silently REPLACES a same-named user
+                # column (case-insensitively, under Spark's default
+                # resolution) — and the post-pack drop would then delete
+                # the user's data from the committed version. Loud failure
+                # instead, same convention as sql_qualify's __q guard and
+                # rank.py's _guard_internal_collisions.
+                reserved = {"__zo"} | {
+                    f"z{i + 1}" for i in range(len(zorder_by))
+                }
+                hit = [c for c in cur.columns if c.lower() in reserved]
+                if hit:
+                    raise ValueError(
+                        "optimize(zorder_by=...): table columns "
+                        f"{hit} collide with the Z-order scratch names "
+                        f"{sorted(reserved)} — rename them first (the "
+                        "rewrite would otherwise drop the user column's "
+                        "data from the new version)"
+                    )
+                cur = zorder_key(cur, zorder_by, out_col="__zo")
+                zdrop = ["__zo"] + [f"z{i + 1}" for i in range(len(zorder_by))]
+            if self.partition_col:
+                # RANGE over (partition value, cluster key): each Spark
+                # partition then holds ONE value (boundary partitions at
+                # most two), so _stage's partitionBy split adds at most
+                # one extra file per value instead of fanning every value
+                # across every Spark partition; oversized values still
+                # split across range boundaries (equal leading keys are
+                # separable on the second key)
+                second = F.col("__zo") if zorder_by else F.xxhash64(
+                    *[F.col(c) for c in cur.columns]
                 )
-        elif zorder_by:
-            packed = cur.repartitionByRange(
-                n_files, F.col("__zo")
-            ).sortWithinPartitions("__zo")
-        else:
-            # repartition, not coalesce: coalesce can only SHRINK the
-            # partition count, silently ignoring the target when the
-            # snapshot reads into fewer splits than n_files
-            packed = cur.repartition(n_files)
-        if zdrop:
-            packed = packed.drop(*zdrop)
-        self._commit(v + 1, self._stage(packed), m["schema"])
-        return v + 1
+                packed = cur.repartitionByRange(
+                    n_files, F.col(self.partition_col), second
+                )
+                if zorder_by:
+                    packed = packed.sortWithinPartitions(
+                        self.partition_col, "__zo"
+                    )
+            elif zorder_by:
+                packed = cur.repartitionByRange(
+                    n_files, F.col("__zo")
+                ).sortWithinPartitions("__zo")
+            else:
+                # repartition, not coalesce: coalesce can only SHRINK the
+                # partition count, silently ignoring the target when the
+                # snapshot reads into fewer splits than n_files
+                packed = cur.repartition(n_files)
+            if zdrop:
+                packed = packed.drop(*zdrop)
+            return self._stage(packed), m["schema"]
+
+        return self._commit_next(attempt)
 
     def restore(self, version: int) -> int:
         """``RESTORE TABLE ... TO VERSION AS OF v`` (Delta 2.x): commit
@@ -531,10 +509,8 @@ class SnapshotTable:
         readers are untouched. Fails loudly if ``version``'s manifest
         has already been vacuumed away (same boundary as time
         travel)."""
-        m = self._manifest(version)  # raises FileNotFoundError if gone
-        v = self.current_version()
-        self._commit(v + 1, m["files"], m["schema"])
-        return v + 1
+        old = self._manifest(version)  # raises FileNotFoundError if gone
+        return self._commit_next(lambda m: (old["files"], old["schema"]))
 
     def clone(self, dest_path: str, version: int | None = None
               ) -> "SnapshotTable":
@@ -542,14 +518,16 @@ class SnapshotTable:
         whose v1 manifest references the SOURCE's data files by
         absolute path — zero data copied, so cloning a 100 TB table is
         one manifest write. The clone then evolves independently
-        (its own commits stage files into its own directory).
+        (its own commits stage files into its own directory). A
+        ``version`` with no manifest raises ``FileNotFoundError``.
 
         The Delta caveat applies verbatim and is the documented
         contract: ``vacuum`` on the SOURCE deletes files a shallow
         clone may still reference — vacuum only consults the source's
         own manifests. Deep-copy (``create(spark, src.read(), ...)``)
         when the source's retention is not under your control."""
-        m = self._manifest(version or self.current_version())
+        m = self._manifest(
+            self.current_version() if version is None else version)
         entries = [
             {**e, "file": os.path.join(self._ddir, e["file"])}
             for e in m["files"]
@@ -565,7 +543,13 @@ class SnapshotTable:
         """Drop manifests older than the last `retain_last` versions and
         delete data files no retained manifest references. Only here do
         data files die — commits never remove files, which is what makes
-        pinned readers safe."""
+        pinned readers safe. ``retain_last`` below 1 raises ValueError:
+        the current version is always retained."""
+        if retain_last < 1:
+            raise ValueError(
+                f"vacuum: retain_last must be >= 1, got {retain_last} — "
+                "the current version is always retained"
+            )
         vs = self.versions()
         keep_vs = vs[-retain_last:]
         live = {

@@ -103,6 +103,36 @@ def test_unpartitioned_append(spark, tmp_path):
     assert t.read().count() == 101
     assert t.read(version=1).count() == 100
 
+
+def _lose_races(t, win, times=1):
+    """Make ``t`` lose its next ``times`` commit races: each of its
+    first ``times`` current_version() calls returns the version, then
+    lets ``win()`` commit the next one before ``t`` can. Returns the
+    list of versions ``t``'s lost commits targeted (``t._commit`` is
+    wrapped to record every ConcurrentCommitError it raises), so a test
+    can prove the race really happened."""
+    orig_cv, orig_commit = t.current_version, t._commit
+    left = [times]
+    lost = []
+
+    def stale():
+        v = orig_cv()
+        if left[0]:
+            left[0] -= 1
+            win()
+        return v  # t proceeds with a now-stale base
+
+    def commit(version, *rest):
+        try:
+            orig_commit(version, *rest)
+        except ConcurrentCommitError:
+            lost.append(version)
+            raise
+
+    t.current_version, t._commit = stale, commit
+    return lost
+
+
 def test_concurrent_writers_race_retry_succeeds(spark, tmp_path):
     """Two writers race the same version: the loser gets
     ConcurrentCommitError internally, retries against the fresh
@@ -110,24 +140,11 @@ def test_concurrent_writers_race_retry_succeeds(spark, tmp_path):
     retry (immutable + uniquely named), never re-written."""
     t1 = _mk(spark, tmp_path)
     t2 = SnapshotTable(spark, str(tmp_path / "snap"), partition_col="dt")
-
-    # interleave deterministically: t1 resolves its base version, then
-    # t2 commits before t1's manifest link lands
-    orig_cv = t1.current_version
-    state = {"raced": False}
-
-    def stale_once():
-        v = orig_cv()
-        if not state["raced"]:
-            state["raced"] = True
-            t2.append(spark.createDataFrame(
-                [(900, "w2", "d2")], "k long, v string, dt string"))
-            return v  # t1 proceeds with a now-stale base
-        return orig_cv()
-
-    t1.current_version = stale_once
+    lost = _lose_races(t1, lambda: t2.append(spark.createDataFrame(
+        [(900, "w2", "d2")], "k long, v string, dt string")))
     v = t1.append(spark.createDataFrame(
         [(901, "w1", "d1")], "k long, v string, dt string"))
+    assert lost == [2]
     assert v == 3  # v2 was taken by the racing writer
     cur = t1.read()
     assert cur.count() == 102
@@ -136,25 +153,69 @@ def test_concurrent_writers_race_retry_succeeds(spark, tmp_path):
 
 
 def test_concurrent_writers_exhausted_retries_raise(spark, tmp_path):
-    """With retries disabled the loser surfaces ConcurrentCommitError
-    to the caller instead of silently clobbering the winner."""
+    """A writer that loses every race gives up after 1 + 3 retries and
+    surfaces ConcurrentCommitError to the caller instead of silently
+    clobbering the winner."""
     t1 = _mk(spark, tmp_path)
     t2 = SnapshotTable(spark, str(tmp_path / "snap"), partition_col="dt")
-    orig_cv = t1.current_version
-
-    def always_stale():
-        v = orig_cv()
-        t2.append(spark.createDataFrame(
-            [(990, "w2", "d2")], "k long, v string, dt string"))
-        return v
-
-    t1.current_version = always_stale
+    lost = _lose_races(t1, lambda: t2.append(spark.createDataFrame(
+        [(990, "w2", "d2")], "k long, v string, dt string")), times=99)
     with pytest.raises(ConcurrentCommitError):
-        t1.append(
-            spark.createDataFrame(
-                [(991, "w1", "d1")], "k long, v string, dt string"),
-            max_retries=0,
-        )
+        t1.append(spark.createDataFrame(
+            [(991, "w1", "d1")], "k long, v string, dt string"))
+    assert lost == [2, 3, 4, 5]
+    assert t1.read().filter(F.col("k") == 991).count() == 0
+
+
+@pytest.mark.parametrize("writer", ["delete", "optimize", "overwrite", "restore"])
+def test_rewriting_writers_retry_a_lost_race(spark, tmp_path, writer):
+    """Every writer commits through the one retry loop, not only append
+    and merge: a delete or optimize that loses one race re-reads the
+    winner's version, so the winner's row survives the rewrite; an
+    overwrite or restore re-commits its own file set on top of it."""
+    t1 = _mk(spark, tmp_path)
+    t2 = SnapshotTable(spark, str(tmp_path / "snap"), partition_col="dt")
+    lost = _lose_races(t1, lambda: t2.append(spark.createDataFrame(
+        [(900, "w2", "d2")], "k long, v string, dt string")))
+    new = spark.createDataFrame([(7, "new", "d1")], "k long, v string, dt string")
+    v, want = {
+        "delete": lambda: (t1.delete(F.col("k") < 20),
+                           set(range(20, 100)) | {900}),
+        "optimize": lambda: (t1.optimize(), set(range(100)) | {900}),
+        "overwrite": lambda: (t1.overwrite(new), {7}),
+        "restore": lambda: (t1.restore(1), set(range(100))),
+    }[writer]()
+    assert lost == [2]
+    assert v == 3
+    assert {r.k for r in t1.read().collect()} == want
+    assert {r.k for r in t1.read(version=2).collect()} == set(range(100)) | {900}
+
+
+def test_every_writer_commits_through_one_loop():
+    """Structural pin: only _commit_next publishes a version of an
+    existing table (create and clone write a new table's v1), every
+    writer calls it, and no method keeps a retry budget of its own."""
+    import ast
+    import inspect
+
+    from datawarehouse_spark.sources import snapshot as S
+
+    cls = next(n for n in ast.parse(inspect.getsource(S)).body
+               if isinstance(n, ast.ClassDef) and n.name == "SnapshotTable")
+    calls: dict[str, set[str]] = {}
+    for fn in cls.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for n in ast.walk(fn):
+            if isinstance(n, ast.FunctionDef):
+                assert "max_retries" not in [a.arg for a in n.args.args
+                                             + n.args.kwonlyargs], n.name
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute):
+                calls.setdefault(n.func.attr, set()).add(fn.name)
+    assert calls["_commit"] == {"_commit_next", "create", "clone"}
+    assert calls["_commit_next"] == {
+        "append", "overwrite", "merge", "delete", "optimize", "restore"}
+    assert calls["merge"] == {"upsert"}
 
 
 def test_vacuum_keeps_pinned_retained_reader_alive(spark, tmp_path):
@@ -183,27 +244,56 @@ def test_upsert_retry_remerges_against_new_version(spark, tmp_path):
     of the snapshot the loser first read."""
     t1 = _mk(spark, tmp_path)
     t2 = SnapshotTable(spark, str(tmp_path / "snap"), partition_col="dt")
-    orig_cv = t1.current_version
-    state = {"raced": False}
-
-    def stale_once():
-        v = orig_cv()
-        if not state["raced"]:
-            state["raced"] = True
-            # the winner updates k=0 in the same partition
-            t2.upsert(spark.createDataFrame(
-                [(0, "WINNER", "d1")], "k long, v string, dt string"), "k")
-            return v
-        return orig_cv()
-
-    t1.current_version = stale_once
+    # the winner updates k=0 in the same partition
+    lost = _lose_races(t1, lambda: t2.upsert(spark.createDataFrame(
+        [(0, "WINNER", "d1")], "k long, v string, dt string"), "k"))
     v = t1.upsert(spark.createDataFrame(
         [(1, "LOSER-RETRIED", "d1")], "k long, v string, dt string"), "k")
+    assert lost == [2]
     assert v == 3
     cur = t1.read()
     assert cur.filter(F.col("k") == 0).first()["v"] == "WINNER"
     assert cur.filter(F.col("k") == 1).first()["v"] == "LOSER-RETRIED"
     assert cur.count() == 100
+
+
+def test_upsert_is_merge_unique_key_and_reserved_markers(spark, tmp_path):
+    """upsert is merge with its defaults, so it keeps merge's source
+    checks: a duplicate source key raises instead of committing a
+    table with two rows for the key, and a source column named like a
+    match marker raises instead of being overwritten."""
+    t = _mk(spark, tmp_path)
+    dup = spark.createDataFrame(
+        [(10, "a", "d1"), (10, "b", "d1")], "k long, v string, dt string")
+    with pytest.raises(ValueError, match="unique source key"):
+        t.upsert(dup, "k")
+    marker = spark.createDataFrame(
+        [(10, "a", "d1", 1)], "k long, v string, dt string, _S long")
+    with pytest.raises(ValueError, match="internal match markers"):
+        t.upsert(marker, "k")
+    assert t.current_version() == 1
+    assert t.read().filter(F.col("k") == 10).count() == 1
+
+
+def test_version_zero_and_bad_retain_last_raise(spark, tmp_path):
+    """Version 0 is never committed (versions start at 1), so reading or
+    cloning it raises FileNotFoundError like any missing version
+    instead of resolving to the current snapshot; vacuum refuses to
+    retain fewer than one version (0 used to delete nothing, -1 used to
+    drop v1) and leaves every manifest and file in place."""
+    t = _mk(spark, tmp_path)
+    t.upsert(spark.createDataFrame(
+        [(10, "NEW", "d1")], "k long, v string, dt string"), "k")
+    with pytest.raises(FileNotFoundError):
+        t.read(version=0)
+    with pytest.raises(FileNotFoundError):
+        t.clone(str(tmp_path / "clone"), version=0)
+    files = sorted(os.listdir(t._ddir))
+    for retain_last in (0, -1):
+        with pytest.raises(ValueError, match="retain_last"):
+            t.vacuum(retain_last=retain_last)
+    assert t.versions() == [1, 2]
+    assert sorted(os.listdir(t._ddir)) == files
 
 
 def test_delta_interop_boundary(spark, tmp_path):
