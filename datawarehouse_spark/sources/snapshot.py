@@ -15,9 +15,12 @@ giving optimistic concurrency — the loser retries on a fresh version).
 Why this scales to 100 TB: data files are never rewritten in place and
 never deleted by a commit (only by an explicit `vacuum` of unreferenced
 files), merges rewrite only the files of **touched partitions**
-(manifest partition pruning — O(changed data), not O(table)), and the
-manifest itself is O(file count) JSON — for >10⁶ files the same design
-shards the manifest, which is exactly Iceberg's manifest-list layer.
+(manifest partition pruning — O(changed data), not O(table)),
+`optimize` rewrites only the partition values that are not already
+compact (sized from Parquet footers, so a compact table costs no Spark
+job), and the manifest itself is O(file count) JSON — for >10⁶ files
+the same design shards the manifest, which is exactly Iceberg's
+manifest-list layer.
 On a Delta-enabled cluster the whole class collapses to MERGE INTO.
 """
 
@@ -28,6 +31,7 @@ import os
 import shutil
 import uuid
 from collections.abc import Callable
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +44,18 @@ _LOCAL_BLOCK_SIZE = 32 * 1024 * 1024
 #: lost commit races a write re-runs before ConcurrentCommitError
 #: reaches its caller (see SnapshotTable._commit_next)
 _MAX_RETRIES = 3
+
+#: the directory name Spark's partitionBy gives a null (or empty-string)
+#: partition value
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _pkey(value: object) -> str | None:
+    """The key a partition value is matched on: a manifest's recorded
+    value, a merge source's value (cast to string by Spark), or one a
+    reader asks for. Null and the empty string are one key, because
+    Spark's partitionBy writes both to the default partition."""
+    return None if value is None or value == "" else str(value)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -110,8 +126,8 @@ class SnapshotTable:
             self.current_version() if version is None else version)
         entries = m["files"]
         if partitions is not None:
-            want = {str(p) for p in partitions}
-            entries = [e for e in entries if str(e.get("partition")) in want]
+            want = {_pkey(p) for p in partitions}
+            entries = [e for e in entries if _pkey(e.get("partition")) in want]
         return self._scan(m, entries)
 
     def _scan(self, m: dict, entries: list[dict]) -> DataFrame:
@@ -174,7 +190,15 @@ class SnapshotTable:
         from its ``__pv=`` directory name (None on unpartitioned
         tables), while the real partition column stays inside the data
         files — read() then needs no dir parsing or column
-        re-attachment."""
+        re-attachment.
+
+        The recorded value is the directory name unescaped: Spark
+        writes ``%XX`` for the characters it escapes (``x:y`` becomes
+        ``x%3Ay``), which ``urllib.parse.unquote`` exactly inverts, and
+        its default-partition name (a null or empty value) is recorded
+        as None. Manifests written before this rule keep the escaped
+        names, so a merge or a ``read(partitions=...)`` does not match
+        such a file's escaped or null value."""
         staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
         entries: list[dict] = []
         try:
@@ -185,7 +209,10 @@ class SnapshotTable:
                 df.write.parquet(staging)
             for dirpath, _dirs, files in os.walk(staging):
                 base = os.path.basename(dirpath)
-                pval = base.split("=", 1)[1] if base.startswith("__pv=") else None
+                pval = None
+                if base.startswith("__pv="):
+                    raw = base.split("=", 1)[1]
+                    pval = None if raw == _DEFAULT_PARTITION else unquote(raw)
                 for f in files:
                     if not f.endswith(".parquet"):
                         continue
@@ -326,10 +353,14 @@ class SnapshotTable:
         reject_markers("source", source.columns)
         # one aggregate validates the source and finds the partitions it
         # touches; struct() keeps nulls countable: a null key is one
-        # distinct value, a null partition value becomes "None" as str()
+        # distinct value, and a null partition value is collected too.
+        # The values are cast to string as Spark does for partition
+        # directory names, so they compare with the manifest's recorded
+        # values whatever the column type (a boolean is "true", not "True")
         aggs = [F.count(F.lit(1)), F.count_distinct(F.struct(on))]
         if self.partition_col:
-            aggs.append(F.collect_set(F.struct(self.partition_col)))
+            aggs.append(F.collect_set(F.struct(
+                F.col(self.partition_col).cast("string"))))
         n_src, n_keys, *pv = source.agg(*aggs).first()
         if n_keys != n_src:
             raise ValueError(
@@ -338,7 +369,7 @@ class SnapshotTable:
                 "(multiple matches per target row are nondeterministic; "
                 "pre-aggregate the source)"
             )
-        parts = {str(r[0]) for r in pv[0]} if pv else None
+        parts = {_pkey(r[0]) for r in pv[0]} if pv else None
 
         def attempt(m: dict) -> tuple[list[dict], str]:
             # the target checks run per pass: they hold for the version
@@ -356,8 +387,8 @@ class SnapshotTable:
             if parts is None:
                 touched, kept = m["files"], []
             else:
-                touched = [e for e in m["files"] if str(e["partition"]) in parts]
-                kept = [e for e in m["files"] if str(e["partition"]) not in parts]
+                touched = [e for e in m["files"] if _pkey(e["partition"]) in parts]
+                kept = [e for e in m["files"] if _pkey(e["partition"]) not in parts]
             j = (
                 self._scan(m, touched).withColumn("_t", F.lit(1)).alias("t")
                 .join(
@@ -421,30 +452,65 @@ class SnapshotTable:
         time travel to every earlier version are untouched, and the
         rewritten files die only at the next ``vacuum`` (same
         immutability contract as every other commit). A lost commit
-        race re-packs the winner's version.
+        race re-plans against the winner's version.
+
+        The rewrite is planned per partition value (an unpartitioned
+        table is one group) from each live file's row count in its
+        Parquet footer. A value's files carry over verbatim when they
+        already are what the rewrite would produce: no file above
+        ``target_rows_per_file`` and exactly ``max(1, ceil(rows /
+        target_rows_per_file))`` files. Only the other values' files
+        are read, packed and restaged, so optimize is idempotent: on a
+        compact table it runs no Spark job and commits the unchanged
+        file list as the next version (a manifest-only commit, like
+        :meth:`restore`), so it always returns the version it
+        committed. A value split at a range boundary by the packing
+        below is rewritten alone by the next optimize, and then stays.
 
         ``zorder_by`` sorts the rewrite by the interleaved Morton key
         (operators/layout.py::zorder_key) via a RANGE repartition, so
         every listed dimension clusters at once and per-file min/max
         zone maps tighten — the OPTIMIZE ZORDER BY of Delta/Iceberg.
-        Without it the rewrite is pure bin-packing (small-file
-        compaction under the table's version control — the managed
-        sibling of sources/io.py::compact_small_files).
+        Clustering is a property of the whole file set, so with it
+        every file is rewritten. Without it the rewrite is pure
+        bin-packing (small-file compaction under the table's version
+        control — the managed sibling of
+        sources/io.py::compact_small_files).
 
-        Scale shape: one read of the current file set, one count, one
-        range (or hash) exchange, one write; total file count ≈
+        Scale shape: O(live files) footer reads on the driver (local
+        filesystem, like :meth:`_scan`'s ``stat``), no count job, and
+        O(rewritten rows) of I/O: one read of the rewritten files, one
+        range (or hash) exchange and one write; their file count ≈
         ceil(rows / target_rows_per_file), so a micro-batch-fragmented
-        table collapses to row-proportional files. Partitioned tables
+        value collapses to row-proportional files. Partitioned tables
         range-partition on (partition value, cluster key) so each
         output split holds one value (boundary splits at most two —
         ≤ one extra file per value) and oversized values still split;
         the rewrite preserves dir-encoded partition pruning."""
+        import pyarrow.parquet as pq
+
         from datawarehouse_spark.operators.layout import zorder_key
 
+        target = int(target_rows_per_file)
+
+        def files_for(n_rows: int) -> int:
+            return max(1, -(-n_rows // target))
+
         def attempt(m: dict) -> tuple[list[dict], str]:
-            cur = self._scan(m, m["files"])
-            n = cur.count()
-            n_files = max(1, -(-n // int(target_rows_per_file)))
+            rows: dict[str | None, list[int]] = {}
+            for e in m["files"]:
+                footer = pq.read_metadata(os.path.join(self._ddir, e["file"]))
+                rows.setdefault(e["partition"], []).append(footer.num_rows)
+            redo = {
+                pv for pv, ns in rows.items()
+                if zorder_by or max(ns) > target or len(ns) != files_for(sum(ns))
+            }
+            if not redo:
+                return m["files"], m["schema"]
+            kept = [e for e in m["files"] if e["partition"] not in redo]
+            cur = self._scan(
+                m, [e for e in m["files"] if e["partition"] in redo])
+            n_files = files_for(sum(sum(rows[pv]) for pv in redo))
             zdrop: list[str] = []
             if zorder_by:
                 # zorder_key injects __zo plus z1..zN scratch columns via
@@ -497,7 +563,7 @@ class SnapshotTable:
                 packed = cur.repartition(n_files)
             if zdrop:
                 packed = packed.drop(*zdrop)
-            return self._stage(packed), m["schema"]
+            return kept + self._stage(packed), m["schema"]
 
         return self._commit_next(attempt)
 

@@ -4,6 +4,7 @@ vacuum) without jars — the round-2 verdict's "transaction log" gap."""
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
 
@@ -71,6 +72,40 @@ def test_partition_pruned_read(spark, tmp_path):
     d1 = t.read(partitions=["d1"])
     assert d1.count() == 50
     assert {r["dt"] for r in d1.select("dt").distinct().collect()} == {"d1"}
+
+
+def test_partition_values_spark_escapes_match_merge_and_read(spark, tmp_path):
+    """The manifest records a partition value as the value itself, not
+    Spark's directory name for it: ``x:y`` (written as ``x%3Ay``) and
+    null (written as the default-partition directory, like the empty
+    string) match a merge source's values and ``read(partitions=...)``.
+    Recording the directory names made this merge keep the old row of
+    every key beside the new one, and the pruned read return nothing.
+    A merge source's values compare in Spark's string form, so a
+    boolean partition (directory ``true``) matches too."""
+    schema = "k long, v string, p string"
+    t = SnapshotTable.create(
+        spark, spark.createDataFrame(
+            [(1, "a", "x:y"), (2, "b", None), (3, "c", "")], schema),
+        str(tmp_path / "esc"), partition_col="p",
+    )
+    assert {e["partition"] for e in t._manifest(1)["files"]} == {"x:y", None}
+    t.merge(spark.createDataFrame(
+        [(1, "A", "x:y"), (2, "B", None), (3, "C", "")], schema), on="k")
+    assert sorted((r.k, r.v, r.p) for r in t.read().collect()) == [
+        (1, "A", "x:y"), (2, "B", None), (3, "C", "")]
+    assert [(r.k, r.v) for r in t.read(partitions=["x:y"]).collect()] == [
+        (1, "A")]
+    assert sorted(r.k for r in t.read(partitions=[None]).collect()) == [2, 3]
+
+    bools = "k long, v string, b boolean"
+    tb = SnapshotTable.create(
+        spark, spark.createDataFrame([(1, "a", True), (2, "b", False)], bools),
+        str(tmp_path / "bool"), partition_col="b",
+    )
+    tb.merge(spark.createDataFrame([(1, "A", True)], bools), on="k")
+    assert sorted(tuple(r) for r in tb.read().collect()) == [
+        (1, "A", True), (2, "b", False)]
 
 
 def test_concurrent_commit_conflict_raises(spark, tmp_path):
@@ -783,22 +818,41 @@ def test_merge_job_count_independent_of_untouched_partitions(spark, tmp_path):
     assert tasks80 <= tasks40, counts
 
 
+@contextlib.contextmanager
+def _fixed_read_splits(spark):
+    """Pin Spark's read-split packing so a scan's task count depends on
+    the files alone, not on the core count: minPartitionNum is 4, and
+    maxPartitionBytes is past the 4 MB open cost Spark counts per file
+    times the 160 files the largest table here scans (the default
+    128 MB cap would give it more splits than a 40-file table)."""
+    pins = {"spark.sql.files.minPartitionNum": "4",
+            "spark.sql.files.maxPartitionBytes": "1g"}
+    old = {k: spark.conf.get(k, None) for k in pins}
+    for k, v in pins.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_read_job_count_independent_of_live_files(spark, tmp_path):
     """read() scans the manifest's files without listing them or
     inferring a footer schema: building the frame runs no Spark job,
     and read().count() runs the same jobs on a 40- and an 80-partition
     table with no more tasks (no per-file listing task, no inference
-    job); so does optimize(), which reads through it. Passing the live
+    job); so does optimize() (on these compact tables it runs none,
+    test_optimize_of_compact_table_is_a_manifest_only_commit). Passing the live
     files to spark.read.parquet would list them in a parallel job (past
     Spark's 32-path threshold, one task per file) and infer their schema
-    in another, breaking every pin. minPartitionNum is pinned to 4 so
-    Spark's read-split packing is the same at every core count: below
-    3 cores it would cap a split at 128 MB, counting 4 MB of open cost
-    per file, and give the 80-file table more read splits."""
-    key = "spark.sql.files.minPartitionNum"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "4")
-    try:
+    in another, breaking every pin. The read splits are pinned
+    (_fixed_read_splits) so the counts are the same at every core
+    count."""
+    with _fixed_read_splits(spark):
         builds, reads, optimizes = {}, {}, {}
         for n_parts in (40, 80):
             t = _month_table(spark, str(tmp_path / f"r{n_parts}"), n_parts)
@@ -809,17 +863,109 @@ def test_read_job_count_independent_of_live_files(spark, tmp_path):
             assert n["rows"] == n_parts * 10
             optimizes[n_parts] = jobs_and_tasks(spark, t.optimize)
             assert t.read().count() == n_parts * 10
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
     assert builds == {40: (0, 0), 80: (0, 0)}, builds
     for counts, max_jobs in ((reads, 2), (optimizes, 4)):
         (jobs40, tasks40), (jobs80, tasks80) = counts[40], counts[80]
         assert jobs40 <= max_jobs, (reads, optimizes)
         assert jobs80 == jobs40, (reads, optimizes)
         assert tasks80 <= tasks40, (reads, optimizes)
+
+
+def _live(t):
+    """{partition value: sorted file names} of the current manifest."""
+    m = t._manifest(t.current_version())
+    out = {}
+    for e in m["files"]:
+        out.setdefault(e["partition"], []).append(e["file"])
+    return {pv: sorted(fs) for pv, fs in out.items()}
+
+
+def _rows(t):
+    return sorted(tuple(r) for r in t.read().collect())
+
+
+def _second_file_per_value(spark, t, n_parts, values=None):
+    """Append one more file to each of ``values`` (default: every one)
+    of a _month_table, with new keys."""
+    df = spark.range(n_parts * 10, n_parts * 20).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 3).alias("val"),
+        F.format_string("p%03d", F.col("id") % n_parts).alias("pt"),
+    )
+    if values is not None:
+        df = df.filter(F.col("pt").isin(values))
+    t.append(df.coalesce(1))
+
+
+def test_optimize_of_compact_table_is_a_manifest_only_commit(spark, tmp_path):
+    """optimize() on a table whose every partition value already holds
+    one file below the target carries every file over: it runs no Spark
+    job, still commits the next version, and that version names exactly
+    the same files. Rewriting them (as optimize did before it planned
+    from footers) ran a count and a shuffled write: 4 jobs, 10 tasks."""
+    t = _month_table(spark, str(tmp_path / "c80"), 80)
+    v0, before, rows = t.current_version(), _live(t), _rows(t)
+    assert len(before) == 80 and all(len(fs) == 1 for fs in before.values())
+    got = {}
+    assert jobs_and_tasks(spark, lambda: got.update(v=t.optimize())) == (0, 0)
+    assert got["v"] == v0 + 1 == t.current_version()
+    assert t._manifest(v0 + 1)["files"] == t._manifest(v0)["files"]
+    assert _rows(t) == rows
+
+
+def test_optimize_rewrites_only_partitions_that_are_not_compact(
+        spark, tmp_path):
+    """A second file in 3 of 40 partition values makes optimize rewrite
+    those 3 values' files into one file each; the other 37 values keep
+    their file names. An optimize straight after is a no-op again: no
+    job, same names. Content is the same throughout."""
+    t = _month_table(spark, str(tmp_path / "p40"), 40)
+    frag = ["p001", "p017", "p033"]
+    _second_file_per_value(spark, t, 40, frag)
+    before, rows = _live(t), _rows(t)
+    assert {pv for pv, fs in before.items() if len(fs) == 2} == set(frag)
+
+    t.optimize()
+    after = _live(t)
+    assert _rows(t) == rows
+    assert set(after) == set(before)
+    for pv, fs in after.items():
+        if pv in frag:
+            assert len(fs) == 1 and not set(fs) & set(before[pv]), pv
+        else:
+            assert fs == before[pv], pv
+
+    v = t.current_version()
+    assert jobs_and_tasks(spark, t.optimize) == (0, 0)
+    assert t.current_version() == v + 1
+    assert _live(t) == after
+    assert _rows(t) == rows
+
+
+def test_optimize_rewrite_job_count_independent_of_partition_count(
+        spark, tmp_path):
+    """With two files in every partition value, optimize rewrites every
+    value from the files' footer row counts: no count job, so the scan,
+    exchange and write run at most 2 jobs, the same number on a 40- and
+    an 80-partition table, with no more tasks on the larger one (the
+    read splits are pinned, _fixed_read_splits). Each value ends with
+    one file and the content is unchanged."""
+    counts = {}
+    with _fixed_read_splits(spark):
+        for n_parts in (40, 80):
+            t = _month_table(spark, str(tmp_path / f"o{n_parts}"), n_parts)
+            _second_file_per_value(spark, t, n_parts)
+            assert all(len(fs) == 2 for fs in _live(t).values())
+            rows = _rows(t)
+            counts[n_parts] = jobs_and_tasks(spark, t.optimize)
+            after = _live(t)
+            assert len(after) == n_parts
+            assert all(len(fs) == 1 for fs in after.values())
+            assert _rows(t) == rows
+    (jobs40, tasks40), (jobs80, tasks80) = counts[40], counts[80]
+    assert jobs40 <= 2, counts
+    assert jobs80 == jobs40, counts
+    assert tasks80 <= tasks40, counts
 
 
 def test_read_of_vacuumed_files_fails_at_call_time(spark, tmp_path):
@@ -868,9 +1014,9 @@ def test_manifest_scan_is_a_parquet_file_scan(spark, tmp_path):
 def test_merge_source_validation_null_semantics(spark, tmp_path):
     """The one-pass source validation keeps the old null semantics: a
     null key is one distinct value (one null key merges as an insert,
-    two raise the unique-key error), and a null partition value adds
-    no touched file (it matches no manifest partition, which records
-    nulls as Spark's default-partition directory name)."""
+    two raise the unique-key error), and a null partition value touches
+    exactly the null partition's files (the manifest records Spark's
+    default-partition directory as None)."""
     rows = [(1, 10, "d1"), (2, 20, "d1"), (3, 30, "d2"), (4, 40, None)]
     t = SnapshotTable.create(
         spark, spark.createDataFrame(rows, "k long, val long, dt string"),
@@ -893,17 +1039,17 @@ def test_merge_source_validation_null_semantics(spark, tmp_path):
         t.merge(two_null, on="k")
     assert t.current_version() == v1
 
-    # null partition value: only d2's files are rewritten; the existing
-    # null-partition file is carried over, and the source row is inserted
+    # null partition value: d2's and the null partition's files are
+    # rewritten, d1's are carried over, and the source row is inserted
     files_v1 = {e["file"]: e["partition"] for e in t._manifest(v1)["files"]}
+    assert None in files_v0.values()
     null_src = spark.createDataFrame(
         [(3, 33, "d2"), (5, 50, None)], "k long, val long, dt string")
     v2 = t.merge(null_src, on="k")
     files_v2 = {e["file"]: e["partition"] for e in t._manifest(v2)["files"]}
     rewritten = {p for f, p in files_v1.items() if f not in files_v2}
-    assert rewritten == {"d2"}
-    assert {f for f, p in files_v0.items() if p not in ("d1", "d2")} \
-        <= set(files_v2)
+    assert rewritten == {"d2", None}
+    assert {f for f, p in files_v1.items() if p == "d1"} <= set(files_v2)
     got2 = {(r.k, r.val, r.dt) for r in t.read(v2).collect() if r.k is not None}
     assert got2 == {(1, 11, "d1"), (2, 20, "d1"), (3, 33, "d2"),
                     (4, 40, None), (5, 50, None)}
