@@ -56,17 +56,6 @@ def shingles_col(text: str = "text", n: int = 3) -> Column:
     )
 
 
-def minhash_col(shingles: Column, seed: int) -> Column:
-    """One MinHash value: lexicographic min of md5(seed || shingle).
-
-    md5 exists with identical output in every engine we oracle against;
-    lexicographic min over hex strings is a valid uniform min-hash.
-    """
-    return F.array_min(
-        F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"{seed}|"), s)))
-    )
-
-
 def _salted_md5(col, salt: int) -> Column:
     """md5 of the (optionally salted) shingle — materialized ONCE in
     the pre-aggregation projection; the k min-hash functions then each

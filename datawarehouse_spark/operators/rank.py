@@ -47,6 +47,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from datawarehouse_spark.operators.reserved import reject_reserved
+
 #: Largest block count the SINGLE-level triangular lift handles
 #: (4096² ≈ 16.7M joined pairs — sub-second, broadcastable); past it
 #: block_offsets takes the two-level lift automatically.
@@ -57,12 +59,6 @@ ONE_LEVEL_MAX_BLOCKS = 4096
 #: same 16.7M-pair budget per level — so the cap is now just a sanity
 #: rail (a session would need >16.7M shuffle partitions to hit it).
 MAX_AUTO_BLOCKS = ONE_LEVEL_MAX_BLOCKS**2
-
-#: Internal working columns — global_rank/global_cumsum refuse input
-#: frames that already carry one of these (a silent withColumn
-#: overwrite + drop would corrupt caller data without error).
-_INTERNAL_COLS = ("_blk", "_rn", "_off", "_cum_in", "_mid")
-
 
 def resolve_n_blocks(df: DataFrame, n_blocks: int | None = None) -> int:
     """The block count for a global-order pass: the caller's explicit
@@ -82,15 +78,6 @@ def resolve_n_blocks(df: DataFrame, n_blocks: int | None = None) -> int:
     except Exception:  # non-numeric / locked-down conf
         conf = spark.sparkContext.defaultParallelism
     return max(1, min(int(conf), MAX_AUTO_BLOCKS))
-
-
-def _guard_internal_collisions(df: DataFrame, caller: str) -> None:
-    clash = [c for c in _INTERNAL_COLS if c in df.columns]
-    if clash:
-        raise ValueError(
-            f"{caller}: input columns {clash} collide with internal "
-            f"working names {_INTERNAL_COLS}; rename them first"
-        )
 
 
 def block_offsets(
@@ -222,7 +209,7 @@ def global_rank(
     suite_pair_blocking's sf1 union under the default heap (SCALE.md
     r13) — and at 100 TB a rank checkpoint must hold keys, never
     payload."""
-    _guard_internal_collisions(df, "global_rank")
+    reject_reserved("global_rank", df.columns, ("_blk", "_rn", "_off", "_mid"))
     nb = resolve_n_blocks(df, n_blocks)
     staged = (
         df.repartitionByRange(nb, *order)
@@ -267,7 +254,7 @@ def global_cumsum(
     attaches the grand total (``total_col``) for share-of-total
     projections. ``n_blocks`` auto-sizes from the session's shuffle
     parallelism when omitted (resolve_n_blocks)."""
-    _guard_internal_collisions(df, "global_cumsum")
+    reject_reserved("global_cumsum", df.columns, ("_blk", "_cum_in", "_off"))
     nb = resolve_n_blocks(df, n_blocks)
     ranged = df.repartitionByRange(nb, *order).withColumn(
         "_blk", F.spark_partition_id()

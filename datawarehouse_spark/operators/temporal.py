@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from datawarehouse_spark.operators.reserved import reject_reserved
+
 
 def asof_join(
     left: DataFrame,
@@ -46,20 +48,11 @@ def asof_join(
     lcols = [c for c in left.columns if c != on]
 
     # the union-window plan tags rows and interleaves both schemas, so
-    # shared non-key names or reserved tags would silently collide —
-    # fail loudly instead (mirrors salted_join's mode guard)
-    overlap = set(lcols) & set(rvals)
-    if overlap:
-        raise ValueError(
-            f"asof_join: non-key column names must be disjoint; both "
-            f"sides have {sorted(overlap)} — rename one side first"
-        )
-    reserved = {"_t", "_tag", "_rv"} & (set(left.columns) | set(right.columns))
-    if reserved:
-        raise ValueError(
-            f"asof_join: column names {sorted(reserved)} are reserved "
-            "for internal tagging; rename them first"
-        )
+    # the tags and (on the left) the right side's value columns are
+    # working names that must not collide with an input column
+    tags = ("_t", "_tag", "_rv")
+    reject_reserved("asof_join", left.columns, (*tags, *rvals))
+    reject_reserved("asof_join", right.columns, tags)
 
     # the right row travels as ONE struct, non-null exactly on right
     # rows: per-column last(ignorenulls) would skip a matched right

@@ -9,6 +9,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datawarehouse_spark.operators.partitioning import widen_narrow_input
+from datawarehouse_spark.operators.reserved import reject_reserved
 
 #: tiny high-frequency function-word lists per language (public
 #: linguistics knowledge); enough for an n-gram/stopword heuristic
@@ -376,20 +377,12 @@ def ffd_packing(df: DataFrame, id_col: str = "doc_id",
     (llm_batch_prep's chunk ∘ FFD pipeline)."""
     if group_size < 2:
         raise ValueError("ffd_packing: group_size must be >= 2")
-    # reject inputs whose columns collide with the operator's working
-    # names (ADVICE r13): an input column named e.g. 'bin' or 'grp'
-    # would be silently shadowed — same contract as global_rank /
-    # asof_join / SnapshotTable.merge
-    _ffd_internal = (
-        "n_tokens", "grp", "slot", "bin", "_r", "_load", "_nb", "_fbin",
-        "bin_load", "n_in_bin", "bin_fill", "pack_grp", "bin_id",
-    )
-    clash = [c for c in _ffd_internal if c in df.columns and c != id_col]
-    if clash:
-        raise ValueError(
-            f"ffd_packing: input columns {clash} collide with internal "
-            f"working names {_ffd_internal}; rename them first"
-        )
+    # the first projection keeps only id_col, so it is the one input
+    # name that meets the columns added after it (operators/reserved.py)
+    reject_reserved("ffd_packing", [id_col], (
+        "n_tokens", "_r", "pack_grp", "bin_id", "bin_load", "n_in_bin",
+        "bin_fill",
+    ))
     from datawarehouse_spark.operators.rank import global_rank
 
     if tokens_col is None:

@@ -17,7 +17,11 @@ def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
                       mode: str = "overwrite") -> None:
     """S2/S3 — multi-level Hive-style partition layout (the reference's
     4-level PARTITIONED BY re-layout, docs/HiveSQL.md:42-55): coarse
-    index via directory pruning; Catalyst prunes matching dirs."""
+    index via directory pruning; Catalyst prunes matching dirs.
+
+    S5 — dynamic partition insert (docs/HiveSQL.md:60-63): rows route
+    to partition dirs from their column values; with
+    partitionOverwriteMode=dynamic only touched partitions rewrite."""
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
@@ -29,14 +33,6 @@ def ctas(spark: SparkSession, name: str, query: str,
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.format("parquet").saveAsTable(name)
-
-
-def insert_into_partitions(df: DataFrame, path: str,
-                           partition_cols: list[str]) -> None:
-    """S5 — dynamic partition insert (docs/HiveSQL.md:60-63): rows route
-    to partition dirs from their column values; with
-    partitionOverwriteMode=dynamic only touched partitions rewrite."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def _leaf_parquet_dirs(path: str) -> list[str]:

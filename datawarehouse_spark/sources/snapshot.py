@@ -33,9 +33,11 @@ import uuid
 from collections.abc import Callable
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from datawarehouse_spark.operators.reserved import reject_reserved
 
 #: the block size Hadoop's local filesystem reports for every file
 #: (``fs.local.block.size``), recorded in the statuses _scan builds
@@ -117,15 +119,27 @@ class SnapshotTable:
         manifest (never committed, or vacuumed) raises
         ``FileNotFoundError``.
 
+        A ``partitions`` value matches as Spark names its partition
+        directory: cast to the partition column's type, then to string
+        (``True`` is ``'true'``, ``1e-5`` is ``'1.0E-5'``); a value the
+        type cannot hold raises Spark's cast error.
+
         Scale shape: O(selected files) metadata, all of it from the
         manifest plus one local ``stat`` per file (see :meth:`_scan`);
         no Spark job runs before the frame executes, whatever the live
-        file count. A file already deleted by ``vacuum`` raises
+        file count (the cast is a literal-only query, evaluated on the
+        driver). A file already deleted by ``vacuum`` raises
         ``FileNotFoundError`` here, at call time."""
         m = self._manifest(
             self.current_version() if version is None else version)
         entries = m["files"]
         if partitions is not None:
+            if self.partition_col and partitions:
+                t = self._schema(m)[self.partition_col].dataType.simpleString()
+                partitions = [r[0] for r in self.spark.sql(
+                    "SELECT CAST(c AS STRING) FROM VALUES "
+                    + ", ".join([f"(CAST(? AS {t}))"] * len(partitions))
+                    + " AS v(c)", args=list(partitions)).collect()]
             want = {_pkey(p) for p in partitions}
             entries = [e for e in entries if _pkey(e.get("partition")) in want]
         return self._scan(m, entries)
@@ -336,21 +350,12 @@ class SnapshotTable:
         Target columns, the read schema and the file list come from the
         manifest, so nothing scales with the untouched files: no
         listing of them and no footer inference."""
-        # _t/_s are the internal match markers injected below; a user
-        # column of either name would be silently REPLACED by the
-        # withColumn (Spark resolves case-insensitively by default) and
-        # every rewritten row committed with the marker literal — the
-        # same loud-failure rule optimize() applies to its __zo/z* names
-        def reject_markers(side: str, cols: list[str]) -> None:
-            hit = [c for c in cols if c.lower() in ("_t", "_s")]
-            if hit:
-                raise ValueError(
-                    f"merge: {side} column(s) {hit} collide with merge's "
-                    "internal match markers (_t, _s; case-insensitive) — "
-                    "rename them before merging"
-                )
-
-        reject_markers("source", source.columns)
+        # _t/_s are the match markers injected below; a user column of
+        # either name would be silently REPLACED by the withColumn and
+        # every rewritten row committed with the marker literal
+        # (operators/reserved.py)
+        markers = ("_t", "_s")
+        reject_reserved("merge source", source.columns, markers)
         # one aggregate validates the source and finds the partitions it
         # touches; struct() keeps nulls countable: a null key is one
         # distinct value, and a null partition value is collected too.
@@ -375,7 +380,7 @@ class SnapshotTable:
             # the target checks run per pass: they hold for the version
             # this pass merges into, not for one read before the race
             cols = self._schema(m).names
-            reject_markers("target", cols)
+            reject_reserved("merge target", cols, markers)
             unknown = sorted(set(update_set or ()) - set(cols))
             if unknown:
                 raise ValueError(
@@ -515,25 +520,12 @@ class SnapshotTable:
             if zorder_by:
                 # zorder_key injects __zo plus z1..zN scratch columns via
                 # withColumn, which silently REPLACES a same-named user
-                # column (case-insensitively, under Spark's default
-                # resolution) — and the post-pack drop would then delete
-                # the user's data from the committed version. Loud failure
-                # instead, same convention as sql_qualify's __q guard and
-                # rank.py's _guard_internal_collisions.
-                reserved = {"__zo"} | {
-                    f"z{i + 1}" for i in range(len(zorder_by))
-                }
-                hit = [c for c in cur.columns if c.lower() in reserved]
-                if hit:
-                    raise ValueError(
-                        "optimize(zorder_by=...): table columns "
-                        f"{hit} collide with the Z-order scratch names "
-                        f"{sorted(reserved)} — rename them first (the "
-                        "rewrite would otherwise drop the user column's "
-                        "data from the new version)"
-                    )
-                cur = zorder_key(cur, zorder_by, out_col="__zo")
+                # column — and the drop below would then delete the
+                # user's data from the committed version
+                # (operators/reserved.py)
                 zdrop = ["__zo"] + [f"z{i + 1}" for i in range(len(zorder_by))]
+                reject_reserved("optimize(zorder_by=...)", cur.columns, zdrop)
+                cur = zorder_key(cur, zorder_by, out_col="__zo")
             if self.partition_col:
                 # RANGE over (partition value, cluster key): each Spark
                 # partition then holds ONE value (boundary partitions at
@@ -709,9 +701,6 @@ def cdc_apply(changes: DataFrame, key: str, seq_col: str,
     (tested composition: tests/test_streaming.py snapshot-registry
     restart); this operator is the deterministic batch core.
     """
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
     w = W.partitionBy(key).orderBy(F.col(seq_col).desc())
     return (
         changes.withColumn("_rn", F.row_number().over(w))

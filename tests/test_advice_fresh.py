@@ -153,11 +153,12 @@ TRIAGE: dict[str, dict[str, str]] = {
     "datawarehouse_spark/operators/rank.py:95": {
         "status": "fixed",
         "fix_file": "datawarehouse_spark/operators/rank.py",
-        "fix_pattern": r"collide with internal",
-        "note": "_guard_internal_collisions raises loudly when an input "
-        "column matches a working name (_blk/_rn/_off/_cum_in), called "
-        "by both global_rank and global_cumsum; tested with a planted "
-        "_blk column.",
+        "fix_pattern": r'reject_reserved\("global_rank"',
+        "note": "global_rank and global_cumsum call "
+        "operators/reserved.py::reject_reserved, which raises when an "
+        "input column equals one of their working names ignoring case; "
+        "tested with planted _blk/_mid/_BLK/_MID columns "
+        "(tests/test_reserved.py).",
     },
     "bench.py:216": {
         "status": "fixed",
@@ -172,10 +173,10 @@ TRIAGE: dict[str, dict[str, str]] = {
     "datawarehouse_spark/sources/snapshot.py:277": {
         "status": "fixed",
         "fix_file": "datawarehouse_spark/sources/snapshot.py",
-        "fix_pattern": r"collide with the Z-order scratch names",
-        "note": "optimize(zorder_by=...) raises on a case-insensitive "
-        "collision with __zo/z1..zN before touching the table; tested "
-        "with planted __zo and Z1 columns "
+        "fix_pattern": r'reject_reserved\("optimize\(zorder_by=\.\.\.\)"',
+        "note": "optimize(zorder_by=...) checks the table columns against "
+        "__zo/z1..zN with reject_reserved (ignoring case) before touching "
+        "the table; tested with planted __zo and Z1 columns "
         "(test_optimize_zorder_reserved_name_guard).",
     },
     "datawarehouse_spark/engine.py:135": {
@@ -217,10 +218,10 @@ TRIAGE: dict[str, dict[str, str]] = {
     "datawarehouse_spark/sources/snapshot.py:301": {
         "status": "fixed",
         "fix_file": "datawarehouse_spark/sources/snapshot.py",
-        "fix_pattern": r"internal match markers",
-        "note": "merge() raises up front when either side carries a "
-        "_t/_s column (case-insensitive) instead of silently replacing "
-        "it with the injected marker literal "
+        "fix_pattern": r'reject_reserved\("merge source"',
+        "note": "merge() checks both sides against its _t/_s match markers "
+        "with reject_reserved (ignoring case) instead of silently "
+        "replacing a user column with the injected marker literal "
         "(test_merge_guards_reserved_markers_and_unknown_update_keys).",
     },
     "datawarehouse_spark/sources/snapshot.py:320": {
@@ -261,10 +262,12 @@ TRIAGE: dict[str, dict[str, str]] = {
     "datawarehouse_spark/operators/text.py:326": {
         "status": "fixed",
         "fix_file": "datawarehouse_spark/operators/text.py",
-        "fix_pattern": r"ffd_packing: input columns \{clash\} collide",
-        "note": "ffd_packing rejects inputs whose columns collide with "
-        "its internal working names (grp/slot/bin/_r/_load/_fbin/_nb "
-        "+ output ledger names) — pinned by a pytest raises-check.",
+        "fix_pattern": r'reject_reserved\("ffd_packing", \[id_col\]',
+        "note": "ffd_packing checks id_col, the one input column its first "
+        "projection keeps, against the names it adds after it (_r, "
+        "n_tokens and the ledger names) with reject_reserved; any other "
+        "input column is dropped and cannot collide (tests/test_reserved.py, "
+        "test_ffd_packing_hand_check_and_invariants).",
     },
     "datawarehouse_spark/operators/similarity.py:1775": {
         "status": "fixed",

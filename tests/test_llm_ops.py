@@ -2297,11 +2297,14 @@ def test_ffd_packing_hand_check_and_invariants(spark):
     assert len(out) == corpus.count()  # every doc assigned once
     assert len({r["doc_id"] for r in out}) == len(out)
 
-    # ADVICE r13: input columns colliding with internal working names
-    # must be rejected, not silently shadowed
-    bad = docs.withColumn("bin", F.lit(1))
-    with pytest.raises(ValueError, match="collide with internal"):
-        T.ffd_packing(bad, budget=10, group_size=8)
+    # the first projection keeps only the id column, so any other input
+    # column packs the same rows, whatever its name (tests/test_reserved.py
+    # pins the id column's own check)
+    plain = sorted(T.ffd_packing(docs, budget=10, group_size=8).collect())
+    for extra in ("bin", "BIN"):
+        assert sorted(T.ffd_packing(
+            docs.withColumn(extra, F.lit(1)), budget=10, group_size=8,
+        ).collect()) == plain
     by_bin: dict[int, list] = {}
     for r in out:
         by_bin.setdefault(r["bin_id"], []).append(r)

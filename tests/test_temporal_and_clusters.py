@@ -50,7 +50,7 @@ def test_asof_join_rejects_colliding_columns(spark):
     corrupt the union-window plan — must fail loudly instead."""
     l = spark.createDataFrame([(1, 10, "x")], "k int, lt long, v string")
     r = spark.createDataFrame([(1, 5, "y")], "k int, rt long, v string")
-    with pytest.raises(ValueError, match="disjoint"):
+    with pytest.raises(ValueError, match=r"\['v'\] collide"):
         asof_join(l, r, "k", "lt", "rt")
     l2 = spark.createDataFrame([(1, 10, "x")], "k int, lt long, _tag string")
     r2 = spark.createDataFrame([(1, 5, "y")], "k int, rt long, rv string")
